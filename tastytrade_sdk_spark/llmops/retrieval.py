@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tastytrade_sdk_spark.llmops.textops import tokens_expr
+from tastytrade_sdk_spark.session import overlap
+from tastytrade_sdk_spark.streaming.sinks import atomic_write
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -398,33 +400,23 @@ def _write_batch_layout(
     stats aggregate."""
     import json
     import os
-    import tempfile
-    import threading
+
+    def _doclen_write() -> DataFrame:
+        out = dl.localCheckpoint(eager=True)
+        out.write.mode("overwrite").parquet(os.path.join(path, "doclen"))
+        return out
 
     # postings and doclen writes are lineage-disjoint — overlap them;
     # _stats.json still commits atomically and LAST
-    errs: "list[BaseException]" = []
-
-    def _postings_write():
-        try:
-            (
-                postings.withColumn("bucket", _bucket_col(n_buckets))
-                .repartition(n_buckets, "bucket", "term")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(os.path.join(path, "postings"))
-            )
-        except BaseException as e:  # noqa: BLE001 — re-raised below
-            errs.append(e)
-
-    t_post = threading.Thread(target=_postings_write)
-    t_post.start()
-    dl = dl.localCheckpoint(eager=True)
-    dl.write.mode("overwrite").parquet(os.path.join(path, "doclen"))
-    t_post.join()
-    if errs:
-        raise errs[0]
-    row = dl.agg(
+    dl_done, _ = overlap(
+        _doclen_write,
+        lambda: postings.withColumn("bucket", _bucket_col(n_buckets))
+        .repartition(n_buckets, "bucket", "term")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(os.path.join(path, "postings")),
+    )
+    row = dl_done.agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]
     stats = {
@@ -432,10 +424,7 @@ def _write_batch_layout(
         "sum_dl": int(row["s"] or 0),
         "n_buckets": n_buckets,
     }
-    fd, tmp = tempfile.mkstemp(dir=path, prefix="._stats.")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(stats, fh)
-    os.replace(tmp, os.path.join(path, _BM25_STATS))
+    atomic_write(os.path.join(path, _BM25_STATS), json.dumps(stats))
     return stats
 
 
@@ -453,14 +442,15 @@ def bm25_index_append(
     if indexed at build time — append-then-search equals
     one-shot-build-then-search (equivalence-tested). Stats commit
     LAST (atomic replace); a crash mid-append leaves the index
-    searchable but the batch half-applied — re-run after a rebuild,
+    searchable but the batch half-applied. The postings and doclen
+    appends run CONCURRENTLY, so a failed append can leave them
+    diverged in EITHER direction (postings without their doc lengths,
+    or doc lengths without their postings) under the old stats —
+    repair with a rebuild (bm25_index_write) or bm25_index_compact;
     same single-writer/quiesce contract as ivf_index_append and
     compact_parquet_table."""
     import json
     import os
-    import tempfile
-
-    import threading
 
     with open(os.path.join(path, _BM25_STATS)) as fh:
         stats = json.load(fh)
@@ -468,41 +458,31 @@ def bm25_index_append(
     postings = build_postings(
         new_docs, text_col, id_col, spread=False
     ).withColumn("bucket", _bucket_col(n_buckets))
+
+    def _doclen_append() -> DataFrame:
+        # one materialization feeds both the append and the stats delta
+        dl = doc_lengths(
+            new_docs, text_col, id_col, spread=False
+        ).localCheckpoint(eager=True)
+        dl.write.mode("append").parquet(os.path.join(path, "doclen"))
+        return dl
+
     # postings and doclen appends are lineage-disjoint and land in
     # disjoint dirs — overlap them (the _write_batch_layout /
     # stream-batch pattern); stats still commits atomically and LAST
-    errs: "list[BaseException]" = []
-
-    def _postings_append():
-        try:
-            (
-                postings.repartition(n_buckets, "bucket", "term")
-                .write.mode("append")
-                .partitionBy("bucket")
-                .parquet(os.path.join(path, "postings"))
-            )
-        except BaseException as e:  # noqa: BLE001 — re-raised below
-            errs.append(e)
-
-    t_post = threading.Thread(target=_postings_append)
-    t_post.start()
-    # one materialization feeds both the append and the stats delta
-    dl = doc_lengths(
-        new_docs, text_col, id_col, spread=False
-    ).localCheckpoint(eager=True)
-    dl.write.mode("append").parquet(os.path.join(path, "doclen"))
-    t_post.join()
-    if errs:
-        raise errs[0]
+    dl, _ = overlap(
+        _doclen_append,
+        lambda: postings.repartition(n_buckets, "bucket", "term")
+        .write.mode("append")
+        .partitionBy("bucket")
+        .parquet(os.path.join(path, "postings")),
+    )
     row = dl.agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]
     stats["n_docs"] += int(row["n"])
     stats["sum_dl"] += int(row["s"] or 0)
-    fd, tmp = tempfile.mkstemp(dir=path, prefix="._stats.")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(stats, fh)
-    os.replace(tmp, os.path.join(path, _BM25_STATS))
+    atomic_write(os.path.join(path, _BM25_STATS), json.dumps(stats))
     return stats
 
 
@@ -683,7 +663,6 @@ def bm25_index_stream_batch(
     first for the same reason."""
     import json
     import os
-    import tempfile
 
     dyn = {"partitionOverwriteMode": "dynamic"}
     # layout guard FIRST — before any data lands: a sink restarted
@@ -718,10 +697,7 @@ def bm25_index_stream_batch(
         # crash after data but before the stamp would let a restart
         # with a different modulus leave ghost old-modulus buckets)
         os.makedirs(path, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=path, prefix="._layout.")
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"n_buckets": n_buckets}, fh)
-        os.replace(tmp, layout_path)
+        atomic_write(layout_path, json.dumps({"n_buckets": n_buckets}))
     # spread=False: per-trigger index builds amortize nothing — the
     # (bucket, term) repartition follows immediately, so the _spread
     # partition-count probe plus its extra exchange would be paid on
@@ -730,51 +706,37 @@ def bm25_index_stream_batch(
     postings = build_postings(
         batch_df, text_col, id_col, spread=False
     ).withColumn("bucket", _bucket_col(n_buckets))
+
+    def _doclen_write() -> DataFrame:
+        # one materialization feeds the doclen write AND the stats row
+        dl = doc_lengths(
+            batch_df, text_col, id_col, spread=False
+        ).localCheckpoint(eager=True)
+        (
+            dl.withColumn("epoch", F.lit(epoch_id))
+            .write.mode("overwrite")
+            .options(**dyn)
+            .partitionBy("epoch")
+            .parquet(f"{path}/doclen")
+        )
+        return dl
+
     # the postings and doclen pipelines share no lineage and land in
-    # disjoint directories — submit the postings write in a thread so
-    # the doclen checkpoint + write run CONCURRENTLY with it and the
-    # per-trigger wall is max(postings, doclen), not their sum (the
-    # near_dup_filter_batch admit pattern). The stats row still
-    # commits LAST, preserving the existing reader window (a reader
-    # could always observe postings before their epoch's stats row;
-    # replay convergence covers the crash case either way).
-    import threading
-
-    errs: "list[BaseException]" = []
-
-    def _run(fn):
-        def wrapped():
-            try:
-                fn()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        t = threading.Thread(target=wrapped)
-        t.start()
-        return t
-
-    t_post = _run(
+    # disjoint directories — overlap them so the per-trigger wall is
+    # max(postings, doclen), not their sum (the near_dup_filter_batch
+    # admit pattern). The stats row still commits LAST, preserving the
+    # existing reader window (a reader could always observe postings
+    # before their epoch's stats row; replay convergence covers the
+    # crash case either way).
+    dl, _ = overlap(
+        _doclen_write,
         lambda: postings.withColumn("epoch", F.lit(epoch_id))
         .repartition(n_buckets, "bucket", "term")
         .write.mode("overwrite")
         .options(**dyn)
         .partitionBy("epoch", "bucket")
-        .parquet(f"{path}/postings")
+        .parquet(f"{path}/postings"),
     )
-    dl = doc_lengths(batch_df, text_col, id_col, spread=False).localCheckpoint(
-        eager=True
-    )  # one materialization feeds the doclen write AND the stats row
-    t_dl = _run(
-        lambda: dl.withColumn("epoch", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .options(**dyn)
-        .partitionBy("epoch")
-        .parquet(f"{path}/doclen")
-    )
-    for t in (t_post, t_dl):
-        t.join()
-    if errs:
-        raise errs[0]
     (
         dl.agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -828,7 +790,6 @@ def bm25_index_compact(spark, path: str, id_col: str = "doc_id") -> dict:
     import json
     import os
     import shutil
-    import tempfile
 
     tmp, old = path + ".__tmp", path + ".__old"
     if not os.path.exists(path) and os.path.exists(old):
@@ -877,10 +838,9 @@ def bm25_index_compact(spark, path: str, id_col: str = "doc_id") -> dict:
     stats = _write_batch_layout(postings, dl, n_buckets, tmp)
     # keep _layout.json so a RE-compaction and the stream-batch guard
     # both keep working on the compacted index
-    fd, t = tempfile.mkstemp(dir=tmp, prefix="._layout.")
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"n_buckets": n_buckets}, fh)
-    os.replace(t, os.path.join(tmp, "_layout.json"))
+    atomic_write(
+        os.path.join(tmp, "_layout.json"), json.dumps({"n_buckets": n_buckets})
+    )
     # concurrent-writer detection (same contract as
     # compact_parquet_table): a micro-batch that landed during the
     # rewrite would ride into .__old and be deleted with it — re-check

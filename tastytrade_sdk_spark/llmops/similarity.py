@@ -24,6 +24,9 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tastytrade_sdk_spark.session import overlap
+from tastytrade_sdk_spark.streaming.sinks import atomic_write
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -1310,9 +1313,11 @@ def ivf_index_write(
     )
     # stamp the routing identity (underscore-prefixed: invisible to
     # the parquet reader); append/search verify it before touching
-    # the index
-    with open(os.path.join(path, "_centroids_md5"), "w") as fh:
-        fh.write(_centroid_digest(centroids))
+    # the index, so the stamp is atomic — a torn digest would refuse
+    # every later append, stream batch and search
+    atomic_write(
+        os.path.join(path, "_centroids_md5"), _centroid_digest(centroids)
+    )
 
 
 def ivf_index_append(
@@ -1697,24 +1702,20 @@ def ivf_index_stream_batch(
     mis-route (same guard as append), with no crash window where data
     sits on disk unguarded."""
     import os
-    import tempfile
 
     _check_ivf_layout(path, "stream", "ivf_index_stream_batch")
     sidecar = os.path.join(path, "_centroids_md5")
     if os.path.exists(sidecar):
         _check_centroid_sidecar(path, centroids, "ivf_index_stream_batch")
     else:
-        # stamp BEFORE the first data write, atomically (mkstemp +
+        # stamp BEFORE the first data write, atomically (temp file +
         # replace): stamping after would leave a crash window where
         # epoch-0 data exists with no sidecar, so a restart with
         # DIFFERENT centroids would skip the guard, re-route the
         # replayed epoch and leave the old mis-routed list partitions
         # behind as ghosts; a torn write would brick every later batch
         os.makedirs(path, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=path, prefix="._centroids.")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(_centroid_digest(centroids))
-        os.replace(tmp, sidecar)
+        atomic_write(sidecar, _centroid_digest(centroids))
     assign_col = _ivf_assign_col(centroids)
     (
         # no _spread: per-trigger folds amortize nothing — the
@@ -1784,7 +1785,6 @@ def ivf_index_compact(
     Returns the number of vectors in the compacted index."""
     import os
     import shutil
-    import tempfile
 
     tmp, old = path + ".__tmp", path + ".__old"
     if not os.path.exists(path) and os.path.exists(old):
@@ -1833,10 +1833,9 @@ def ivf_index_compact(
         .parquet(tmp)
     )
     n = int(obs.get["n"])
-    fd, t = tempfile.mkstemp(dir=tmp, prefix="._centroids.")
-    with os.fdopen(fd, "w") as fh:
-        fh.write(_centroid_digest(centroids))
-    os.replace(t, os.path.join(tmp, "_centroids_md5"))
+    atomic_write(
+        os.path.join(tmp, "_centroids_md5"), _centroid_digest(centroids)
+    )
     if _listing() != before:
         shutil.rmtree(tmp)
         raise RuntimeError(
@@ -2098,20 +2097,18 @@ def knn_graph_index_write(
     # §2.6 overlap-independent-jobs; the bm25 sidecar precedent). The
     # sidecar stamp + swap still happen strictly last, so the atomic
     # rebuild / torn-index story is unchanged.
-    import threading
-
-    errs: list[BaseException] = []
-
-    def _bg(fn):
-        def wrapped():
-            try:
-                fn()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        t = threading.Thread(target=wrapped)
-        t.start()
-        return t
+    def _write_edges():
+        # repartition to EXACTLY n_buckets partitions (not the
+        # session's shuffle default): one task and one file per bucket
+        # dir, so the write constant scales with the layout, not with
+        # a config knob
+        (
+            graph.withColumn("bucket", bucket)
+            .repartition(n_buckets, "bucket")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(os.path.join(tmp, "edges"))
+        )
 
     def _write_units():
         (
@@ -2140,21 +2137,7 @@ def knn_graph_index_write(
             os.path.join(tmp, "entry")
         )
 
-    threads = [_bg(_write_units), _bg(_write_entry)]
-    # repartition to EXACTLY n_buckets partitions (not the session's
-    # shuffle default): one task and one file per bucket dir, so the
-    # write constant scales with the layout, not with a config knob
-    (
-        graph.withColumn("bucket", bucket)
-        .repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(tmp, "edges"))
-    )
-    for t in threads:
-        t.join()
-    if errs:
-        raise errs[0]
+    overlap(_write_edges, _write_units, _write_entry)
     with open(os.path.join(tmp, "_centroids_md5"), "w") as fh:
         fh.write(_centroid_digest(centroids))
     with open(os.path.join(tmp, "_graph_meta.json"), "w") as fh:

@@ -20,6 +20,7 @@ from tastytrade_sdk_spark.llmops.dedup import (
 )
 from tastytrade_sdk_spark.llmops.multimodal import attach_payload_meta
 from tastytrade_sdk_spark.llmops.similarity import brute_force_topk, lsh_topk
+from tastytrade_sdk_spark.session import overlap
 from tastytrade_sdk_spark.sources.tables import load_table
 
 from tastytrade_sdk_spark.plans._llm_base import (  # noqa: F401
@@ -780,30 +781,16 @@ def ivf_index_stream_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cross-epoch ordering was never part of the convergence
         # contract. The epoch-1 REPLAY stays strictly after: that
         # ordering IS the crash/restart case under test.
-        import threading
-
-        errs: list[BaseException] = []
-
-        def _fold(ep: int):
-            try:
-                ivf_index_stream_batch(
-                    corpus.filter(F.col("vec_id") % 3 == ep),
-                    f"{tmp}/index",
-                    ep,
-                    cent,
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        threads = [
-            threading.Thread(target=_fold, args=(ep,)) for ep in range(3)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            raise errs[0]
+        # pinned by tests/test_overlap.py::test_concurrent_epoch_folds_survive
+        overlap(*(
+            lambda ep=ep: ivf_index_stream_batch(
+                corpus.filter(F.col("vec_id") % 3 == ep),
+                f"{tmp}/index",
+                ep,
+                cent,
+            )
+            for ep in range(3)
+        ))
         # crash/restart: epoch 1 folds in AGAIN and must converge
         ivf_index_stream_batch(
             corpus.filter(F.col("vec_id") % 3 == 1), f"{tmp}/index", 1, cent
@@ -851,30 +838,16 @@ def ivf_index_compact_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # concurrent epoch folds (disjoint partition trees, atomic +
         # idempotent sidecar stamp — the ivf_index_stream_search
         # rationale); compaction runs strictly after both
-        import threading
-
-        errs: list[BaseException] = []
-
-        def _fold(ep: int):
-            try:
-                ivf_index_stream_batch(
-                    corpus.filter(F.col("vec_id") % 3 == ep),
-                    f"{tmp}/index",
-                    ep,
-                    cent,
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        threads = [
-            threading.Thread(target=_fold, args=(ep,)) for ep in range(2)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            raise errs[0]
+        # pinned by tests/test_overlap.py::test_concurrent_epoch_folds_survive
+        overlap(*(
+            lambda ep=ep: ivf_index_stream_batch(
+                corpus.filter(F.col("vec_id") % 3 == ep),
+                f"{tmp}/index",
+                ep,
+                cent,
+            )
+            for ep in range(2)
+        ))
         ivf_index_compact(spark, f"{tmp}/index", cent)
         ivf_index_append(
             corpus.filter(F.col("vec_id") % 3 == 2), f"{tmp}/index", cent

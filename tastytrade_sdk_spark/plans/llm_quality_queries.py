@@ -20,6 +20,7 @@ from tastytrade_sdk_spark.llmops.dedup import (
 )
 from tastytrade_sdk_spark.llmops.multimodal import attach_payload_meta
 from tastytrade_sdk_spark.llmops.similarity import brute_force_topk, lsh_topk
+from tastytrade_sdk_spark.session import overlap
 from tastytrade_sdk_spark.sources.tables import load_table
 
 from tastytrade_sdk_spark.plans._llm_base import (  # noqa: F401
@@ -316,12 +317,10 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side gaps — checkpoint barriers, the components loop — that
     the other wave's stages fill); the result is timing-independent
     either way. Serially these two chains were ~45% + ~55% of the
-    query; overlapped, the wall is max(chain) + the final join. If the
-    main-thread chain fails, the builder JOINS the helper before
-    re-raising, so a failed build never leaks orphan jobs into the
-    shared session's next query."""
-    import threading
-
+    query; overlapped, the wall is max(chain) + the final join. If
+    either chain fails, ``overlap`` joins the helper before re-raising,
+    so a failed build never leaks orphan jobs into the shared
+    session's next query."""
     from tastytrade_sdk_spark.llmops.cluster import connected_components
     from tastytrade_sdk_spark.llmops.pipeline import (
         quality_threshold,
@@ -338,20 +337,7 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signal projection, once under the MinHash pass)
     toked = _tokenized_docs(spark, sf_dir).localCheckpoint(eager=True)
 
-    holder: dict = {}
-
-    def _dedup_chain():
-        try:
-            holder["comp"] = connected_components(
-                lsh_candidate_pairs(toked, k=16, bands=4, tokens_col="__toks")
-            )
-        except BaseException as e:  # surfaced on join() below
-            holder["err"] = e
-
-    th = threading.Thread(target=_dedup_chain, daemon=True)
-    th.start()
-
-    try:
+    def _signal_chain():
         narrow = toked.select(
             "doc_id",
             split_col("doc_id").alias("split"),
@@ -363,14 +349,14 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold = quality_threshold(
             narrow.select("doc_id", "quality"), 0.25
         ).collect()[0]["threshold"]
-    finally:
-        # ALWAYS drain the helper: if the signal chain raised, letting
-        # the dedup thread keep submitting jobs would leak a running
-        # job wave into whatever the shared session executes next
-        th.join()
-    if "err" in holder:
-        raise holder["err"]
-    comp_t = holder["comp"]
+        return narrow, threshold
+
+    (narrow, threshold), comp_t = overlap(
+        _signal_chain,
+        lambda: connected_components(
+            lsh_candidate_pairs(toked, k=16, bands=4, tokens_col="__toks")
+        ),
+    )
     noncanon = (
         comp_t.filter(F.col("doc_id") != F.col("component"))
         .select("doc_id", F.lit(True).alias("__nc"))

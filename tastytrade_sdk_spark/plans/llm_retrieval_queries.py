@@ -20,6 +20,7 @@ from tastytrade_sdk_spark.llmops.dedup import (
 )
 from tastytrade_sdk_spark.llmops.multimodal import attach_payload_meta
 from tastytrade_sdk_spark.llmops.similarity import brute_force_topk, lsh_topk
+from tastytrade_sdk_spark.session import overlap
 from tastytrade_sdk_spark.sources.tables import load_table
 
 from tastytrade_sdk_spark.plans._llm_base import (  # noqa: F401
@@ -714,8 +715,6 @@ def bm25_index_stream_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_index_topk,
     )
 
-    import threading
-
     docs = load_table(spark, "documents", sf_dir)
     queries = docs.filter(F.col("doc_id") < 5)
     tmp = tempfile.mkdtemp(prefix="bm25_stream_")
@@ -730,27 +729,13 @@ def bm25_index_stream_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # never depended on cross-epoch ordering. The epoch-1 REPLAY
         # below still runs strictly after — that ordering is the
         # crash/restart story under test.
-        errs: list[BaseException] = []
-
-        def _fold(ep: int):
-            try:
-                bm25_index_stream_batch(
-                    docs.filter(F.col("doc_id") % 3 == ep),
-                    f"{tmp}/index",
-                    ep,
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        threads = [
-            threading.Thread(target=_fold, args=(ep,)) for ep in range(3)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            raise errs[0]
+        # pinned by tests/test_overlap.py::test_concurrent_epoch_folds_survive
+        overlap(*(
+            lambda ep=ep: bm25_index_stream_batch(
+                docs.filter(F.col("doc_id") % 3 == ep), f"{tmp}/index", ep
+            )
+            for ep in range(3)
+        ))
         # crash/restart: epoch 1 folds in AGAIN and must converge
         bm25_index_stream_batch(
             docs.filter(F.col("doc_id") % 3 == 1), f"{tmp}/index", 1

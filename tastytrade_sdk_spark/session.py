@@ -13,11 +13,16 @@ same code deploys unchanged to a multi-executor cluster:
 - Session timezone pinned to UTC: the reference stores naive-UTC
   timestamps (charting/server.py:50-60); pinning makes Spark results
   comparable to DuckDB/parquet epoch values.
+
+``overlap`` is the one way the package runs independent driver jobs
+concurrently on the shared session.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -59,3 +64,45 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def overlap(*fns: Callable[[], Any]) -> list:
+    """Run lineage-independent driver work concurrently and return each
+    callable's result, in argument order.
+
+    ``fns[0]`` runs on the calling thread; the rest run on
+    ``pyspark.InheritableThread``, which copies the caller's Spark
+    local properties (job group, description, scheduler pool, ...)
+    into the helper, so its jobs stay attributable to the caller.
+    Every helper is joined before this returns OR raises — a failure
+    never leaves a writer thread submitting jobs into the shared
+    session. The first error (in argument order) is re-raised; any
+    others are attached to it as notes.
+    """
+    from pyspark import InheritableThread
+
+    results: list = [None] * len(fns)
+    errors: list[BaseException | None] = [None] * len(fns)
+
+    def _run(i: int) -> None:
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors[i] = e
+
+    threads = []
+    try:
+        for i in range(1, len(fns)):
+            t = InheritableThread(_run, args=(i,))
+            t.start()
+            threads.append(t)
+        _run(0)
+    finally:
+        for t in threads:
+            t.join()
+    raised = [e for e in errors if e is not None]
+    if raised:
+        for other in raised[1:]:
+            raised[0].add_note(f"overlap: concurrent failure: {other!r}")
+        raise raised[0]
+    return results

@@ -28,9 +28,10 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from tastytrade_sdk_spark.streaming.sinks import atomic_write
 
 _LATEST = "_latest"
 
@@ -62,10 +63,7 @@ def publish_version(df: DataFrame, root: str) -> int:
         json.dump(manifest, f)
     # the pointer flip is the commit: write-to-temp + rename is atomic
     # on POSIX, so readers see either the old or the new version
-    fd, tmp = tempfile.mkstemp(dir=root, prefix="._latest.")
-    with os.fdopen(fd, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, _pointer_path(root))
+    atomic_write(_pointer_path(root), str(version))
     return version
 
 
@@ -214,7 +212,7 @@ def vacuum_store(
       ``N > _latest``; the retry reuses N (publish_version numbers off
       the pointer) so after grace these are dead,
     - **stale pointer temps**: ``._latest.*`` files from a crash
-      between mkstemp and the atomic replace.
+      inside atomic_write, between its temp write and the replace.
 
     Anything younger than ``grace_s`` (by mtime) is kept — exactly
     Delta's retention-window defense against deleting an IN-FLIGHT

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -199,6 +200,24 @@ def _commit_swap(merged: DataFrame, path: str, epoch_id: int) -> None:
     os.rename(tmp, path)
     if os.path.exists(old):
         shutil.rmtree(old)
+
+
+def atomic_write(path: str, text: str) -> None:
+    """The ONE single-file sidecar commit: write ``text`` to a temp file
+    in ``path``'s own directory (same filesystem, so the replace is a
+    rename), then ``os.replace`` it over ``path``. Readers
+    see the old content or the new, never a torn file. The temp is
+    named ``.<basename>.*`` — debris a crash can leave between the two
+    steps (manifest_store.vacuum_store prunes the ``._latest.*`` kind)."""
+    d, name = os.path.split(path)
+    fd, tmp = tempfile.mkstemp(dir=d or ".", prefix=f".{name}.")
+    try:
+        with os.fdopen(fd, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 def additive_agg_batch(
