@@ -165,8 +165,3 @@ def dte(expiration: Column | str, today: Column | str) -> Column:
     e = F.col(expiration) if isinstance(expiration, str) else expiration
     t = F.col(today) if isinstance(today, str) else today
     return F.datediff(e, t)
-
-
-def normalize_keys(name: str) -> str:
-    """dash->underscore key normalization (helpers.py:7-13) — driver-side."""
-    return name.replace("-", "_")

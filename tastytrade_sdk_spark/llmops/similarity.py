@@ -810,16 +810,6 @@ def random_projection(
     return df.select("*", *cols)
 
 
-def bucket_signature(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id: bit i set iff vec . plane_i > 0."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        d = _dot(vec, lit_plane)
-        sig = sig + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sig
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

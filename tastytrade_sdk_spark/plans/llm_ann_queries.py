@@ -913,11 +913,11 @@ def ivf_index_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM v
     )
     SELECT vec_id, scale,
-           array_to_string(
+           array_to_string(list_transform(
              CASE WHEN scale = 0 THEN list_transform(v, x -> 0::BIGINT)
                   ELSE list_transform(
                     v, x -> floor(x / scale * 127.0 + 0.5)::BIGINT)
-             END, ',') AS qvec,
+             END, q -> coalesce(q::VARCHAR, 'null')), ',') AS qvec,
            CASE WHEN scale = 0 THEN 0.0
                 ELSE list_reduce(list_prepend(0.0,
                        list_transform(v, x ->
@@ -939,7 +939,11 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort over all columns and cannot factorize list-typed cells (r11
     gate failure), and int64 -> decimal string is bit-identical on
     both engines. The library operator (quantize_int8) still returns
-    the real array for in-engine consumers (sq8/ADC rescoring)."""
+    the real array for in-engine consumers (sq8/ADC rescoring).
+
+    A null component joins as the sentinel ``null`` on both engines
+    (both join functions would otherwise skip it), so it stays visible
+    at its position in the digest instead of silently shortening it."""
     from tastytrade_sdk_spark.llmops.similarity import quantize_int8
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -948,7 +952,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "vec_id",
         "scale",
-        F.array_join(F.col("qvec").cast("array<string>"), ",").alias("qvec"),
+        F.array_join(F.col("qvec").cast("array<string>"), ",", "null").alias("qvec"),
         "mse",
     )
 

@@ -247,22 +247,3 @@ def read_decayed_topk(spark, store_path: str, key_col: str) -> DataFrame:
     if readable is None:
         return spark.createDataFrame([], f"`{key_col}` string, score long")
     return spark.read.parquet(readable)
-
-
-def decayed_topk_sink(
-    stream: DataFrame,
-    store_path: str,
-    key_col: str,
-    capacity: int,
-    checkpoint: str,
-):
-    """writeStream wiring for the trending-keys store."""
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda df, epoch: decayed_topk_batch(
-                df, store_path, key_col, capacity, epoch
-            )
-        )
-    )

@@ -113,23 +113,3 @@ def read_hll_store(spark, store_path: str, group_col: str) -> DataFrame:
             [], f"`{group_col}` string, hll_regs array<int>"
         )
     return spark.read.parquet(readable)
-
-
-def hll_store_sink(
-    stream: DataFrame,
-    store_path: str,
-    group_col: str,
-    value_col: str,
-    checkpoint: str,
-    p: int = 6,
-):
-    """writeStream wiring for the bounded distinct-count store."""
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda df, epoch: hll_store_batch(
-                df, store_path, group_col, value_col, epoch, p=p
-            )
-        )
-    )

@@ -16,6 +16,8 @@ from tastytrade_sdk_spark.operators.gapfill import gap_fill
 from tastytrade_sdk_spark.operators.scale import salted_join
 from tastytrade_sdk_spark.sources.compact import decode_compact
 
+SF_DIR = "/root/testdata/sf0.001"
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("symbol", T.StringType()),
@@ -149,12 +151,10 @@ def test_range_join_inverted_interval_emits_nothing(spark):
     assert out.collect() == []  # no spurious descending-sequence bins
 
 
-def test_null_text_doc_parity_vocab_and_batching(spark, tmp_path):
-    """A NULL-text document must flow identically through operator and
-    oracle (advisor r3): vocab_oov_rate keeps it as an n_tokens=0 row
-    on BOTH sides; length_bucketed_batches drops it on BOTH sides. The
-    shipped fixtures have no NULL texts, so this builds an augmented
-    sf_dir and re-runs the real gate harness on it."""
+def _augmented_gate(spark, tmp_path, table: str, extra, only: set[str]):
+    """Run the real gate harness (tools/check_oracle.run_gate) for
+    ``only`` on sf0.001 with ``extra`` rows appended to ``table`` — the
+    shipped fixtures lack these edge cases. Returns (failing, sf_dir)."""
     import os
     import sys
 
@@ -168,13 +168,27 @@ def test_null_text_doc_parity_vocab_and_batching(spark, tmp_path):
 
     from tastytrade_sdk_spark.sources.tables import TABLE_NAMES
 
-    src = "/root/testdata/sf0.001"
     aug = tmp_path / "sf_aug"
     aug.mkdir()
     for t in TABLE_NAMES:
-        if t != "documents":
-            os.symlink(f"{src}/{t}.parquet", aug / f"{t}.parquet")
-    docs = pq.read_table(f"{src}/documents.parquet")
+        if t != table:
+            os.symlink(f"{SF_DIR}/{t}.parquet", aug / f"{t}.parquet")
+    base = pq.read_table(f"{SF_DIR}/{table}.parquet")
+    pq.write_table(
+        pa.concat_tables([base, extra.cast(base.schema)]),
+        aug / f"{table}.parquet",
+    )
+    return run_gate(spark, str(aug), only=only, verbose=False), str(aug)
+
+
+def test_null_text_doc_parity_vocab_and_batching(spark, tmp_path):
+    """A NULL-text document must flow identically through operator and
+    oracle (advisor r3): vocab_oov_rate keeps it as an n_tokens=0 row
+    on BOTH sides; length_bucketed_batches drops it on BOTH sides. The
+    shipped fixtures have no NULL texts, so this builds an augmented
+    sf_dir and re-runs the real gate harness on it."""
+    import pyarrow as pa
+
     extra = pa.table(
         {
             "doc_id": pa.array([900001, 900002], type=pa.int64()),
@@ -184,15 +198,9 @@ def test_null_text_doc_parity_vocab_and_batching(spark, tmp_path):
             "n_chars": pa.array([0, 0], type=pa.int64()),
         }
     )
-    pq.write_table(
-        pa.concat_tables([docs, extra.cast(docs.schema)]),
-        aug / "documents.parquet",
-    )
-    failing = run_gate(
-        spark,
-        str(aug),
-        only={"vocab_oov_rate", "length_bucketed_batches"},
-        verbose=False,
+    failing, _ = _augmented_gate(
+        spark, tmp_path, "documents", extra,
+        {"vocab_oov_rate", "length_bucketed_batches"},
     )
     assert not failing, failing
 
@@ -212,3 +220,35 @@ def test_range_join_runaway_interval_raises(spark):
     )
     with pytest.raises(Exception, match="spans more than"):
         out.collect()
+
+
+def test_quantize_int8_null_component_visible_on_both_engines(spark, tmp_path):
+    """A NULL vector component must survive into embedding_quantize_int8's
+    qvec digest at its position on BOTH engines (ADVICE r12): Spark's
+    array_join and DuckDB's array_to_string both skip nulls unless
+    given a replacement, which silently shortened the digest."""
+    import pyarrow as pa
+
+    import __spark_entry__ as entrymod
+
+    vec = [float(i % 7) - 3.0 for i in range(64)]
+    vec[3] = None
+    extra = pa.table(
+        {
+            "vec_id": pa.array([900001], type=pa.int64()),
+            "embedding": pa.array([vec], type=pa.list_(pa.float32())),
+            "label": pa.array([0], type=pa.int32()),
+        }
+    )
+    failing, aug = _augmented_gate(
+        spark, tmp_path, "embeddings", extra, {"embedding_quantize_int8"}
+    )
+    assert not failing, failing
+    row = (
+        entrymod.queries()["embedding_quantize_int8"](spark, aug)
+        .filter(F.col("vec_id") == 900001)
+        .collect()[0]
+    )
+    parts = row["qvec"].split(",")
+    assert len(parts) == len(vec)
+    assert parts[3] == "null"

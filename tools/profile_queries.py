@@ -1,7 +1,10 @@
 """Focused per-query profiler for optimization rounds.
 
 Times named queries with the noop sink (min-of-N, same methodology as
-bench.py) and/or dumps `.explain("formatted")` to plans/rNN/.
+bench.py) and/or dumps `.explain("formatted")` to plans/rNN/. Each
+timing line also gives the codegen compiles (classes, seconds) over
+its N timed runs: after the warm-up these should be near 0, so a
+large count means the query's generated code does not stay cached.
 
 Usage:
   python tools/profile_queries.py time  [--n 3] [--sf DIR] name [name ...]
@@ -24,7 +27,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, "/root/repo")
 
-from tastytrade_sdk_spark.session import get_spark
+from tastytrade_sdk_spark.session import codegen_compiles, get_spark
 
 
 def main() -> None:
@@ -83,6 +86,7 @@ def main() -> None:
         results = {}
         for name in names:
             best, runs = None, []
+            c0, s0 = codegen_compiles(spark)
             for _ in range(args.n):
                 spark.sparkContext.setJobDescription(f"time:{name}")
                 t0 = time.perf_counter()
@@ -90,8 +94,10 @@ def main() -> None:
                 dt = time.perf_counter() - t0
                 runs.append(round(dt, 3))
                 best = dt if best is None else min(best, dt)
+            c1, s1 = codegen_compiles(spark)
             results[name] = round(best, 3)
-            print(f"{name}: min={best:.3f} runs={runs}", flush=True)
+            print(f"{name}: min={best:.3f} runs={runs} "
+                  f"compiles={c1 - c0} compile_s={s1 - s0:.3f}", flush=True)
         print(json.dumps(results))
 
 
