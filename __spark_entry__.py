@@ -7,7 +7,7 @@
 gate. Every declared query has one (the greedy classifier is oracled
 via unique-outcome fixtures, the ANN searches via spliced-literal /
 fixed-quantizer replays — see plans/kernel_queries.py and
-plans/llm_queries.py).
+plans/llm_ann_queries.py).
 """
 
 from __future__ import annotations

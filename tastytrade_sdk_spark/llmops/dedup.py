@@ -951,7 +951,7 @@ def near_dup_contamination(
 ) -> DataFrame:
     """NEAR-duplicate benchmark contamination: corpus docs sharing at
     least one MinHash-LSH band with any eval/benchmark doc. The exact
-    n-gram audit (plans/llm_queries.contamination_check) misses
+    n-gram audit (plans/llm_dedup_queries.contamination_check) misses
     rephrased or lightly-edited benchmark leakage; band collision at
     the LSH operating point is the standard recall net for that
     (the same dedup threshold GPT-3's and Gopher's decontamination

@@ -254,7 +254,11 @@ def absorb_redelivery(
 ) -> DataFrame:
     """At-least-once absorb: exactly-once per (channel, symbol, offset)
     within the watermark horizon (ack/replay contract, ST7). Beyond the
-    horizon, idempotent upsert sinks own the guarantee."""
+    horizon, idempotent upsert sinks own the guarantee.
+
+    The watermark is on ``ts`` and survives an alias, so
+    ``streaming.streams.streaming_ohlcv`` / ``streaming_latest``
+    downstream keep it rather than declaring their own."""
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["channel", "symbol", "offset"]
     )

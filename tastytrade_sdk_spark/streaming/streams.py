@@ -1,6 +1,16 @@
 """Streaming transformations (SURVEY ST3-ST5): watermarked candle
 aggregation and latest-per-key in update mode — the streaming twins of
 operators/candles.ohlcv and operators/dedup.latest_per_key.
+
+``streaming_ohlcv`` and ``streaming_latest`` declare their event-time
+watermark through ``_event_time``: when the time column already
+carries one (set upstream, e.g. by
+``sources.feedbus.absorb_redelivery``, and kept through an alias),
+that watermark stays and no second one is declared. Spark rejects a
+second watermark after a stateful operator ("Redefining watermark is
+disallowed"), so without this the redelivery absorb could not feed
+either. The ``watermark`` argument then has no effect: the upstream
+delay bounds the state.
 """
 
 from __future__ import annotations
@@ -10,6 +20,17 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# the column metadata key Spark's EventTimeWatermark sets on its column
+_WATERMARK_DELAY_KEY = "spark.watermarkDelayMs"
+
+
+def _event_time(stream: DataFrame, time_col: str, watermark: str) -> DataFrame:
+    """``stream`` watermarked on ``time_col``: the watermark it already
+    carries, else a new one of delay ``watermark``."""
+    if _WATERMARK_DELAY_KEY in stream.schema[time_col].metadata:
+        return stream
+    return stream.withWatermark(time_col, watermark)
 
 
 def streaming_ohlcv(
@@ -27,12 +48,14 @@ def streaming_ohlcv(
     dropped — the bounded-state replacement for the reference's
     unbounded keep-last frames (ST5). The aggregate list is SHARED
     with the batch twin (operators/candles.candle_agg_exprs) so the
-    two schemas — including vwap and column order — cannot drift."""
+    two schemas — including vwap and column order — cannot drift.
+    A watermark already on ``time_col`` takes the place of
+    ``watermark`` (module docstring)."""
     from tastytrade_sdk_spark.operators.candles import candle_agg_exprs
 
     aggs = candle_agg_exprs(time_col, price_col, size_col, order_col)
     agg = (
-        stream.withWatermark(time_col, watermark)
+        _event_time(stream, time_col, watermark)
         .groupBy(
             F.col(symbol_col).alias("symbol"),
             F.window(F.col(time_col), interval).alias("w"),
@@ -60,11 +83,13 @@ def streaming_latest(
     (e.g. ``[time_col, "event_id"]``): with equal timestamps and no
     tiebreak the winner is arbitrary and can FLIP between micro-batch
     replays, breaking the replay-convergence (ST7) story — same
-    deterministic-total-order contract as operators/dedup.keep_last."""
+    deterministic-total-order contract as operators/dedup.keep_last.
+    A watermark already on ``time_col`` takes the place of
+    ``watermark`` (module docstring)."""
     payload = F.struct(*[F.col(c) for c in stream.columns])
     order = F.struct(*[F.col(c) for c in (list(order_cols) if order_cols else [time_col])])
     agg = (
-        stream.withWatermark(time_col, watermark)
+        _event_time(stream, time_col, watermark)
         .groupBy(*keys)
         .agg(F.max_by(payload, order).alias("__latest"))
     )

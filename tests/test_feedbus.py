@@ -281,6 +281,49 @@ def test_streaming_ohlcv_same_from_either_source(spark, source):
         shutil.rmtree(src, ignore_errors=True)
 
 
+def test_absorbed_redelivery_feeds_streaming_candles(spark):
+    """absorb_redelivery composes with streaming_ohlcv: the candle
+    aggregation keeps the absorb's watermark (carried through the
+    ts -> time alias) instead of declaring a second one, which Spark
+    rejects, and a redelivered envelope leaves the candles as they
+    are without it."""
+    rows = [
+        (c, sym, off, ts, json.dumps({"price": 50.0 + off, "size": 10 + off}))
+        for c, sym, off, ts, _ in _rows("trade", "SPY", 0, 12)
+    ]
+
+    def candles(name: str, batches) -> list:
+        src = tempfile.mkdtemp(prefix="bus_candles_")
+        try:
+            for batch in batches:
+                write_feed_batch(spark, src, batch)
+            env = absorb_redelivery(
+                feed_bus_stream(spark, src, max_files_per_trigger=1)
+            )
+            ticks = env.select(
+                "symbol",
+                F.col("ts").alias("time"),
+                F.from_json("payload", "price double, size long").alias("p"),
+            ).select("symbol", "time", "p.price", "p.size")
+            q = (
+                streaming_ohlcv(ticks, price_col="price", size_col="size")
+                .writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(name)
+                .start()
+            )
+            q.processAllAvailable()
+            q.stop()
+            return sorted(spark.sql(f"select * from {name}").collect())
+        finally:
+            shutil.rmtree(src, ignore_errors=True)
+
+    once = candles("bus_candles_once", [rows])
+    redelivered = candles("bus_candles_redelivered", [rows, rows[3:4]])
+    assert [r["count"] for r in once] == [5, 5, 2]
+    assert redelivered == once
+
+
 def test_kafka_envelope_partition_qualified_offsets(spark):
     """Two partitions of one topic can carry the same bare offset; the
     envelope offset must stay distinct (partition-qualified) so the

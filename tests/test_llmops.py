@@ -1012,7 +1012,7 @@ def test_ccnet_ppl_buckets_tercile_boundaries(spark):
     """Per language: head/middle/tail sizes follow the integer tercile
     cuts (n//3-ish), unscorable docs land in tail, and every doc is
     bucketed exactly once."""
-    from tastytrade_sdk_spark.plans.llm_queries import ccnet_ppl_buckets
+    from tastytrade_sdk_spark.plans.llm_quality_queries import ccnet_ppl_buckets
 
     out = ccnet_ppl_buckets(spark, "/root/testdata/sf0.001").collect()
     assert len(out) == 500

@@ -521,10 +521,8 @@ class TestR6cInvariants:
             assert abs(r["s"] - 1.0) <= r["n"] * 5e-7 + 1e-9
 
     def test_bounded_ranges(self, spark):
-        from tastytrade_sdk_spark.plans.llm_queries import (
-            dim_truncation_recall,
-            mmr_rerank_topk,
-        )
+        from tastytrade_sdk_spark.plans.llm_ann_queries import dim_truncation_recall
+        from tastytrade_sdk_spark.plans.llm_retrieval_queries import mmr_rerank_topk
         from tastytrade_sdk_spark.plans.queries import (
             promo_revenue_monthly,
             rolling_beta_daily,

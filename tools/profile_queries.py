@@ -5,6 +5,8 @@ bench.py) and/or dumps `.explain("formatted")` to plans/rNN/. Each
 timing line also gives the codegen compiles (classes, seconds) over
 its N timed runs: after the warm-up these should be near 0, so a
 large count means the query's generated code does not stay cached.
+``python_cpu_s`` is the CPU the Python daemon and workers used over
+the same runs (0 for a query with no Python kernel).
 
 Usage:
   python tools/profile_queries.py time  [--n 3] [--sf DIR] name [name ...]
@@ -27,7 +29,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, "/root/repo")
 
-from tastytrade_sdk_spark.session import codegen_compiles, get_spark
+from tastytrade_sdk_spark.session import codegen_compiles, get_spark, python_worker_cpu
 
 
 def main() -> None:
@@ -87,6 +89,7 @@ def main() -> None:
         for name in names:
             best, runs = None, []
             c0, s0 = codegen_compiles(spark)
+            p0 = python_worker_cpu(spark)
             for _ in range(args.n):
                 spark.sparkContext.setJobDescription(f"time:{name}")
                 t0 = time.perf_counter()
@@ -95,9 +98,11 @@ def main() -> None:
                 runs.append(round(dt, 3))
                 best = dt if best is None else min(best, dt)
             c1, s1 = codegen_compiles(spark)
+            p1 = python_worker_cpu(spark)
             results[name] = round(best, 3)
             print(f"{name}: min={best:.3f} runs={runs} "
-                  f"compiles={c1 - c0} compile_s={s1 - s0:.3f}", flush=True)
+                  f"compiles={c1 - c0} compile_s={s1 - s0:.3f} "
+                  f"python_cpu_s={p1 - p0:.3f}", flush=True)
         print(json.dumps(results))
 
 

@@ -520,7 +520,7 @@ def negatives_demo(spark, sf_dir: str, mult: int) -> None:
 
     from tastytrade_sdk_spark.llmops.cluster import semdedup_prune
     from tastytrade_sdk_spark.llmops.substr import sa_duplicate_spans
-    from tastytrade_sdk_spark.plans.llm_queries import _kmeans_centroids
+    from tastytrade_sdk_spark.plans.llm_dedup_queries import _kmeans_centroids
     from tastytrade_sdk_spark.sources.tables import load_table
 
     def timed(thunk) -> float:
