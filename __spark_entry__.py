@@ -12,12 +12,13 @@ plans/llm_ann_queries.py).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tastytrade_sdk_spark.plans import (
     ORACLE_BENCH_SPLIT,

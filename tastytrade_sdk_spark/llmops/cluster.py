@@ -390,49 +390,30 @@ def kmeans_assign(
     """Nearest-centroid assignment against a FIXED centroid matrix
     (spherical k-means: rows are L2-normalized, similarity = dot).
 
-    Centroid dots are built as left-associative JVM folds over spliced
-    centroid literals — no shuffle, no UDF, bit-reproducible — and
-    ROUNDED before the argmax (fold order is part of the contract;
-    unrounded 1e-16 noise must not flip an assignment). Ties take the
-    FIRST maximal centroid (np.argmax rule).
+    Scored by ``similarity.centroid_argmax`` over the unit vector:
+    left-associative folds over spliced centroid literals — no
+    shuffle, no UDF, bit-reproducible — up to CENTROID_EXPR_MAX k·d,
+    an Arrow matmul above it (the k ∝ n scale path). Dots are ROUNDED
+    before the argmax (fold order is part of the contract; unrounded
+    1e-16 noise must not flip an assignment). Ties take the FIRST
+    maximal centroid (np.argmax rule).
 
-    Adds ``__cluster`` (int) and ``__unit`` (the normalized vector);
+    Adds ``__unit`` (the normalized vector) and ``__cluster`` (int);
     with ``keep_sim`` also ``__sim`` — the (rounded) similarity to the
     assigned centroid, i.e. the prototypicality score.
     """
-    import numpy as np
-
-    m = np.asarray(centroids, dtype=float)
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
+    from tastytrade_sdk_spark.llmops.similarity import (
+        centroid_argmax,
+        with_unit_vector,
     )
-    unit = F.transform(v, lambda x: x / norm)
-    out = df.withColumn("__unit", unit)
-    # one parsed SQL expression per centroid instead of k*dim F.lit
-    # py4j round-trips plus DSL folds (the minhash one-expression rule;
-    # measured ~1.6 s driver chatter per 1024 literals) — value-
-    # identical: same zip_with multiply, same left fold, same round
-    def _dot_row(row) -> Column:
-        from tastytrade_sdk_spark.llmops.similarity import _f64_lit
 
-        arr = ", ".join(_f64_lit(c) for c in row)
-        return F.expr(
-            f"round(aggregate(zip_with(`__unit`, array({arr}), "
-            "(x, y) -> x * y), 0.0D, (a, x) -> a + x), "
-            f"{int(round_dp)})"
-        )
-
-    dots = [_dot_row(row) for row in m]
-    arr = F.array(*dots)
-    out = out.withColumn(
-        "__cluster", (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
+    out = with_unit_vector(df, vec_col).withColumn(
+        "__best", centroid_argmax(F.col("__unit"), centroids, round_dp)
     )
+    out = out.withColumn("__cluster", F.col("__best.i"))
     if keep_sim:
-        out = out.withColumn("__sim", F.array_max(arr))
-    return out
+        out = out.withColumn("__sim", F.col("__best.v"))
+    return out.drop("__best")
 
 
 def kmeans_lloyd_step(
@@ -518,56 +499,6 @@ def kmeans_lloyd_step(
     )
 
 
-def kmeans_assign_kernel(
-    df: DataFrame,
-    centroids,
-    vec_col: str = "embedding",
-    round_dp: int = 8,
-) -> DataFrame:
-    """Nearest-centroid assignment as an Arrow kernel: one
-    (batch x dim) @ (dim x k) BLAS matmul per Arrow batch against a
-    closure-captured centroid matrix.
-
-    The expression-fold twin (kmeans_assign) splices k*dim literals
-    into codegen — the right shape for the small fixed k the exact
-    DuckDB oracle replays, and hopeless past a few dozen centroids.
-    This kernel is the k ∝ n scale path (SemDeDup's
-    constant-cluster-size lever: grow k with the corpus so the
-    within-cluster pair scan stays linear overall). Same contract as
-    kmeans_assign: adds ``__cluster`` (first-maximal argmax over
-    round_dp-rounded dots) and ``__unit``; equivalence-tested against
-    the expression path on shared k."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    m = np.asarray(centroids, dtype=np.float64)
-    fields = list(df.schema.fields) + [
-        T.StructField("__cluster", T.IntegerType()),
-        T.StructField("__unit", T.ArrayType(T.DoubleType())),
-    ]
-    schema = T.StructType(fields)
-    cols = [f.name for f in df.schema.fields]
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            unit = v / norms
-            dots = np.round(unit @ m.T, round_dp)
-            out = pdf[cols].copy()
-            out["__cluster"] = np.argmax(dots, axis=1).astype("int32")
-            out["__unit"] = list(unit)
-            yield out
-
-    return df.mapInPandas(assign, schema)
-
-
 def semdedup_prune(
     df: DataFrame,
     centroids,
@@ -604,10 +535,10 @@ def semdedup_prune_assigned(
     checkpoint: bool = True,
 ) -> DataFrame:
     """The within-cluster prune half of SemDeDup, over a prepared
-    (id, cluster_id, __unit) frame — shared by the exact-oracle
-    expression-assignment path (semdedup_prune) and the large-k
-    kernel-assignment path (kmeans_assign_kernel), so the two scale
-    regimes cannot drift semantically. Pass ``checkpoint=False`` when
+    (id, cluster_id, __unit) frame — shared by the trained-centroid
+    path (semdedup_prune) and the sign-LSH bucket path
+    (semdedup_prune_scaled), so the two scale regimes cannot drift
+    semantically. Pass ``checkpoint=False`` when
     ``slim`` is ALREADY pinned (a caller-side localCheckpoint feeding
     other branches too, e.g. d4_curation) — a second checkpoint would
     duplicate the widest column into block storage for nothing."""
@@ -681,9 +612,9 @@ def semdedup_prune_scaled(
     fixed-k trained-centroid form (semdedup_prune) assigns in n*k
     flops, which turns quadratic the moment k grows with n. At 100 TB
     this is the recipe: hash-route to constant-size buckets (one
-    cluster_id-keyed shuffle), prune within buckets; the trained
-    kmeans_assign_kernel path stays the production choice when a
-    quantizer is available (equivalence-tested on shared k), but its
+    cluster_id-keyed shuffle), prune within buckets; trained-centroid
+    assignment (kmeans_assign, an Arrow matmul at large k) stays the
+    production choice when a quantizer is available, but its
     assignment cost is why real deployments route hierarchically or
     by hash. Like any LSH scheme, pairs straddling a hyperplane land
     in different buckets (recall < exhaustive) — the same bounded
@@ -696,38 +627,26 @@ def semdedup_prune_scaled(
     Returns (id_col, cluster_id, keep)."""
     from tastytrade_sdk_spark.llmops.similarity import (
         _vec_dim,
+        centroid_scores,
         hyperplanes,
+        with_unit_vector,
     )
 
     n = df.count()
     b = lsh_bucket_bits(n, target_bucket, b_min, b_max)
     dim = _vec_dim(df, vec_col)
     planes = hyperplanes(b_max, dim, seed)[:b]
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    unit = F.transform(v, lambda x: x / norm)
-    out = df.withColumn("__unit", unit)
+    out = with_unit_vector(df, vec_col)
     # sign bits over ROUNDED dots (8dp, same grid as kmeans_assign):
     # the fold order is part of the cross-engine contract, and the
     # rounding keeps 1e-16 fold noise from flipping a sign at the
     # hyperplane boundary
-    # one parsed expression per plane (the kmeans_assign rule) instead
-    # of b*dim F.lit round-trips; identical fold/round shape
-    from tastytrade_sdk_spark.llmops.similarity import _f64_lit
-
-    bits = []
-    for i, row in enumerate(planes):
-        arr = ", ".join(_f64_lit(c) for c in row)
-        dot = F.expr(
-            f"round(aggregate(zip_with(`__unit`, array({arr}), "
-            "(x, y) -> x * y), 0.0D, (a, x) -> a + x), 8)"
-        )
-        bits.append(F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    cluster = sum(bits[1:], bits[0]).cast("int")
+    # hyperplane i sets bit i: Horner over the reversed scores
+    cluster = F.aggregate(
+        F.reverse(centroid_scores(F.col("__unit"), planes, 8)),
+        F.lit(0),
+        lambda a, x: a * 2 + F.when(x >= 0, 1).otherwise(0),
+    )
     slim = out.select(
         F.col(id_col), cluster.alias("cluster_id"), "__unit"
     ).repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -756,12 +675,13 @@ def prototypes_prune(
     identical member (house decision-boundary rule). Prototypicality
     ties are broken by id ascending, making the kept set deterministic.
 
-    Plan: narrow spliced-literal assignment (no shuffle), then ONE
-    window shuffle keyed on cluster_id for the rank and member count —
-    linear in vectors, independent of corpus pair structure. At large
-    k the assignment swaps to kmeans_assign_kernel (same contract);
-    skew-wise a cluster's window partition is bounded by the largest
-    cluster, which the k ∝ n rule keeps at a constant expected size.
+    Plan: narrow kmeans_assign projection (no shuffle; spliced-literal
+    folds up to CENTROID_EXPR_MAX k·d, an Arrow matmul above it, same
+    contract), then ONE window shuffle keyed on cluster_id for the
+    rank and member count — linear in vectors, independent of corpus
+    pair structure. Skew-wise a cluster's window partition is bounded
+    by the largest cluster, which the k ∝ n rule keeps at a constant
+    expected size.
 
     Output: (id_col, cluster_id, proto_sim, proto_rank, n_members,
     is_dropped).

@@ -37,35 +37,163 @@ def _dot(a: Column, b: Column) -> Column:
 
 
 def _f64_lit(x) -> str:
-    """SQL text for one double literal. ``repr(float)+'D'`` round-trips
-    every FINITE double exactly, but produces unparseable ``nanD`` /
-    ``infD`` for non-finite values — where the F.lit path this idiom
-    replaced emitted a valid literal (r11 advisor). Map those to the
-    CAST forms Spark parses to the identical IEEE values."""
-    import math
-
-    x = float(x)
-    if math.isnan(x):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(x):
-        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
-    return f"{x!r}D"
+    """SQL text for one finite double: ``repr`` + ``D`` round-trips it."""
+    return f"{float(x)!r}D"
 
 
-def _dot_lit_sql(vec_sql: str, values) -> Column:
-    """_dot against a LITERAL plane, built as ONE parsed SQL expression
-    instead of len(values) F.lit py4j round-trips plus a DSL fold —
-    the minhash one-expression-per-hash rule applied to vector planes
-    (measured: 16x64 literals cost ~1.6 s of pure driver chatter per
-    plan build). Value-identical to
-    ``_dot(F.col(vec_sql), F.array(*map(F.lit, values)))``: same
-    zip_with multiply (cast to double), same left fold from 0.0."""
-    arr = ", ".join(_f64_lit(x) for x in values)
-    return F.expr(
-        f"aggregate(zip_with(`{vec_sql}`, array({arr}), "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, x) -> acc + x)"
+# ---------------- nearest-centroid scoring ----------------
+#
+# Every "score a vector against a fixed matrix, take the best row(s)"
+# step (IVF routing and probing, the k-NN graph entry, k-means
+# assignment, random projection, the sign-LSH bucketer) goes through
+# ``centroid_scores``, the one splice of a literal matrix into a plan.
+# ``centroid_argmax`` picks its form by k·d: up to CENTROID_EXPR_MAX
+# the JVM expression, which starts no Python worker and which DuckDB
+# replays bit for bit (the largest declared query scores 16 × 64 =
+# 1024 literals); above it an Arrow matmul. Measured on 20 000 rows,
+# 4 cores, d = 32/64/128: the expression form took ~0.3 s + ~0.45 ms
+# per unit of k·d, the warm Arrow form a flat ~0.2 s, so Arrow wins
+# from k·d ≈ 128-256; the bound is set by replayability, not speed.
+# ``centroid_top_n`` (probing a few query rows) is the expression
+# form at every k.
+CENTROID_EXPR_MAX = 1024
+
+
+def _literal_matrix(rows) -> "np.ndarray":
+    """``rows`` as a finite, non-empty (k, d) float64 matrix."""
+    m = np.asarray(rows, dtype=np.float64)
+    if m.ndim != 2 or m.size == 0 or not np.isfinite(m).all():
+        raise ValueError(f"need a non-empty (k, d) matrix of finite values, got {m.shape}")
+    return m
+
+
+def centroid_scores(vec: Column, rows, round_dp: int | None = None) -> Column:
+    """array<double>: the dot product of ``vec`` with each row of the
+    literal matrix ``rows`` (k × d), optionally rounded to ``round_dp``.
+
+    The matrix is ONE parsed literal, never k·d ``F.lit`` py4j round
+    trips (~1.6 s of driver chatter per 1024 literals). Each dot is
+    the fold every engine replays bit for bit: zip_with multiply in
+    double, left fold from 0.0. A null vector scores null; a vector
+    whose length is not d raises."""
+    m = _literal_matrix(rows)
+    mat = F.expr(
+        "array("
+        + ", ".join("array(" + ", ".join(map(_f64_lit, row)) + ")" for row in m)
+        + ")"
     )
+
+    def dot(row: Column) -> Column:
+        s = F.aggregate(
+            F.zip_with(vec, row, lambda x, y: x.cast("double") * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        return s if round_dp is None else F.round(s, round_dp)
+
+    d = m.shape[1]
+    msg = F.format_string(f"vector length %d is not the matrix dimension {d}", F.size(vec))
+    return F.when(F.size(vec) == d, F.transform(mat, dot)).when(
+        vec.isNotNull(), F.raise_error(msg)
+    )
+
+
+def _cmp(lft: Column, rgt: Column) -> Column:
+    """array_sort comparator on (v, i) structs: v descending, then i
+    ascending. Spark orders NaN above every number, so on non-null v
+    this is a total order."""
+    return (
+        F.when(lft["v"] > rgt["v"], F.lit(-1))
+        .when(lft["v"] < rgt["v"], F.lit(1))
+        .when(lft["i"] < rgt["i"], F.lit(-1))
+        .when(lft["i"] > rgt["i"], F.lit(1))
+        .otherwise(F.lit(0))
+    )
+
+
+def _top_n(values: Column, n: int) -> Column:
+    """array<int>: indices of the n largest ``values`` (value
+    descending, index ascending)."""
+    pairs = F.transform(
+        values, lambda x, i: F.struct(x.cast("double").alias("v"), i.alias("i"))
+    )
+    return F.transform(
+        F.slice(F.array_sort(pairs, _cmp), 1, n), lambda s: s["i"].cast("int")
+    )
+
+
+def _argmax_expr(vec: Column, rows, round_dp: int | None = None) -> Column:
+    """Expression form of ``centroid_argmax``: the scores array is
+    bound once (a one-element ``transform``), so it is computed once
+    per row and printed once in the plan."""
+    return F.transform(
+        F.array(centroid_scores(vec, rows, round_dp)),
+        lambda s: F.struct(
+            (F.array_position(s, F.array_max(s)) - 1).cast("int").alias("i"),
+            F.array_max(s).alias("v"),
+        ),
+    )[0]
+
+
+def _arrow_scores(vecs, m: "np.ndarray", round_dp: int | None):
+    """One Arrow batch's (len × k) scores, one (batch × d) @ (d × k)
+    matmul (null vectors score 0), and its non-null mask. Raises on a
+    vector whose length is not d, as the expression form does."""
+    valid, d = vecs.notna().to_numpy(), m.shape[1]
+    x = np.zeros((len(vecs), d))
+    if valid.any():
+        present = list(vecs[valid])
+        bad = next((len(v) for v in present if len(v) != d), None)
+        if bad is not None:
+            raise ValueError(f"vector length {bad} is not the matrix dimension {d}")
+        x[valid] = np.stack(present)
+    s = x @ m.T
+    return (s if round_dp is None else np.round(s, round_dp)), valid
+
+
+def _argmax_arrow(vec: Column, rows, round_dp: int | None = None) -> Column:
+    import pandas as pd
+
+    m = _literal_matrix(rows)
+    # Arrow hands a null component to pandas as NaN; the expression
+    # form scores such a vector null, so it goes in as a null vector
+    # (unless its length is wrong, which raises in both forms)
+    vec = F.when(
+        F.forall(vec, lambda x: x.isNotNull()) | (F.size(vec) != m.shape[1]), vec
+    )
+
+    def argmax(vecs):
+        s, valid = _arrow_scores(vecs, m, round_dp)
+        i = np.argmax(s, axis=1).astype("int32")
+        return pd.DataFrame({
+            "i": pd.arrays.IntegerArray(i, ~valid),
+            "v": pd.arrays.FloatingArray(s[np.arange(len(s)), i], ~valid),
+        })
+
+    return F.pandas_udf(argmax, "i int, v double")(vec)
+
+
+def centroid_argmax(vec: Column, rows, round_dp: int | None = None) -> Column:
+    """struct<i int, v double>: the row of ``rows`` scoring highest
+    against ``vec`` (scores rounded to ``round_dp`` if given) and its
+    score. The first maximum wins and NaN counts as largest, as in
+    ``np.argmax``. Null fields for a null vector or one with a null
+    component; a vector of the wrong length raises. JVM expression up
+    to ``CENTROID_EXPR_MAX`` k·d, Arrow matmul above."""
+    form = _argmax_expr if np.size(rows) <= CENTROID_EXPR_MAX else _argmax_arrow
+    return form(vec, rows, round_dp)
+
+
+def centroid_top_n(vec: Column, rows, n: int) -> Column:
+    """array<int>: the ``n`` rows of ``rows`` scoring highest against
+    ``vec`` (score descending, index ascending, NaN first); null for a
+    null vector or one with a null component (every score null); a
+    vector of the wrong length raises. The scores array is bound once,
+    as in ``_argmax_expr``."""
+    return F.transform(
+        F.array(centroid_scores(vec, rows)),
+        lambda s: F.when(F.forall(s, lambda x: x.isNotNull()), _top_n(s, n)),
+    )[0]
 
 
 def _norm(a: Column) -> Column:
@@ -116,7 +244,13 @@ def with_unit_vector(
             F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
         )
     )
-    return df.withColumn(out_col, F.transform(v, lambda x: x / n))
+    # a lambda re-evaluates every outer expression it names once per
+    # element, so the norm is bound once (a one-element ``transform``)
+    # instead of being recomputed d times per row (~35x slower at d=64)
+    return df.withColumn(
+        out_col,
+        F.transform(F.array(n), lambda s: F.transform(v, lambda x: x / s))[0],
+    )
 
 
 def _as_matrix(values) -> "np.ndarray":
@@ -428,16 +562,13 @@ def _ivf_assign_col(cent: "np.ndarray"):
     positive scalar, and two distinct float32 components stay distinct
     under one float64 division (gap >= 2^29 ulp64 vs <= 1 ulp64
     rounding error), so raw argmax == normalized argmax, ties
-    included. Trained (non-axis) centroids go through a JVM fold per
-    centroid (one parsed literal array each — the kmeans_assign
-    one-expression rule, never per-component F.lit round-trips):
-    argmax of the k dot folds with array_position's first-maximal tie
-    rule, the same rule np.argmax applies. The query-side unit
-    normalization drops out of argmax exactly as above; summation
-    order (sequential fold vs numpy's blocked matmul) can differ at
-    ~1 ulp, which is inside the routing's approximation contract (no
-    declared query uses trained centroids — equality with truth is
-    never asserted, recall and self-determinism are)."""
+    included. Trained (non-axis) centroids go through
+    ``centroid_argmax`` (the query-side normalization drops out of
+    argmax exactly as above); its summation order can differ from
+    numpy's blocked matmul at ~1 ulp, which is inside the routing's
+    approximation contract (no declared query uses trained centroids —
+    recall and self-determinism are asserted, not equality with
+    truth)."""
     if _is_axis_centroids(cent):
         n = int(cent.shape[0])
 
@@ -448,89 +579,20 @@ def _ivf_assign_col(cent: "np.ndarray"):
             )
 
         return _assign
-
-    def _assign_trained(vec: Column) -> Column:
-        arr = F.array(*_centroid_dots(vec, cent))
-        return (F.array_position(arr, F.array_max(arr)) - F.lit(1)).cast(
-            "int"
-        )
-
-    return _assign_trained
-
-
-def _centroid_dots(vec: Column, cent: "np.ndarray") -> "list[Column]":
-    """One JVM dot fold per centroid row against a LITERAL array built
-    as a single parsed expression (guide §4 / the _dot_lit_sql idiom —
-    per-component F.lit costs ~1.6 s of py4j chatter per 1024
-    literals). Works on an arbitrary vector Column, so the dispatchers
-    can wrap any input expression."""
-    dots = []
-    for row in cent:
-        lit_arr = F.expr(
-            "array(" + ", ".join(_f64_lit(c) for c in row) + ")"
-        )
-        dots.append(
-            F.aggregate(
-                F.zip_with(
-                    vec, lit_arr, lambda x, y: x.cast("double") * y
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        )
-    return dots
+    return lambda vec: centroid_argmax(vec, cent)["i"]
 
 
 def _ivf_probe_col(cent: "np.ndarray", nprobe: int):
-    """Column function: query vector -> its nprobe nearest list ids.
-    One-hot axis quantizer: order the leading n_lists components
-    descending with ascending-index tiebreak (the oracle's
-    ``ORDER BY component DESC, i``) via an explicit array_sort
-    comparator — same stable order as the UDF's argsort, no Python
-    worker in the search plan. Trained centroids: the same sort over
-    the k JVM dot folds (_centroid_dots) — descending score,
-    ascending-index tiebreak, exactly np.argsort(-dots, stable)."""
-
-    def _cmp(lft, rgt):
-        return (
-            F.when(lft["v"] > rgt["v"], F.lit(-1))
-            .when(lft["v"] < rgt["v"], F.lit(1))
-            .when(lft["i"] < rgt["i"], F.lit(-1))
-            .when(lft["i"] > rgt["i"], F.lit(1))
-            .otherwise(F.lit(0))
-        )
-
+    """Column function: query vector -> its nprobe nearest list ids,
+    score descending with ascending-index tiebreak (the oracle's
+    ``ORDER BY component DESC, i``; np.argsort(-s, stable)). One-hot
+    axis quantizer: that order over the leading n_lists components, no
+    Python worker in the search plan. Trained centroids:
+    ``centroid_top_n``."""
     if _is_axis_centroids(cent):
         n = int(cent.shape[0])
-
-        def _probe(vec: Column) -> Column:
-            pairs = F.transform(
-                F.slice(vec, 1, n),
-                lambda x, i: F.struct(
-                    x.cast("double").alias("v"), i.alias("i")
-                ),
-            )
-            return F.transform(
-                F.slice(F.array_sort(pairs, _cmp), 1, nprobe),
-                lambda s: s["i"].cast("int"),
-            )
-
-        return _probe
-
-    def _probe_trained(vec: Column) -> Column:
-        dots = _centroid_dots(vec, cent)
-        pairs = F.array(
-            *[
-                F.struct(d.alias("v"), F.lit(i).alias("i"))
-                for i, d in enumerate(dots)
-            ]
-        )
-        return F.transform(
-            F.slice(F.array_sort(pairs, _cmp), 1, nprobe),
-            lambda s: s["i"].cast("int"),
-        )
-
-    return _probe_trained
+        return lambda vec: _top_n(F.slice(vec, 1, n), nprobe)
+    return lambda vec: centroid_top_n(vec, cent, nprobe)
 
 
 def ivf_topk(
@@ -801,13 +863,16 @@ def random_projection(
     or LSH search at lake scale."""
     dim = dim if dim is not None else _vec_dim(df, vec_col)
     planes = hyperplanes(out_dim, dim, seed) / np.sqrt(out_dim)
-    # one parsed expression per output dim (see _dot_lit_sql): build
-    # time 2.2 -> 0.6 s at 16x64, plan value-identical
-    cols = [
-        _dot_lit_sql(vec_col, planes[i]).alias(f"{out_prefix}{i}")
-        for i in range(out_dim)
-    ]
-    return df.select("*", *cols)
+    # one scores array per row (a projection of its own: 16 reads of
+    # it must not inline 16 copies of the fold)
+    return (
+        df.withColumn("__proj", centroid_scores(F.col(vec_col), planes))
+        .select(
+            "*",
+            *[F.col("__proj")[i].alias(f"{out_prefix}{i}") for i in range(out_dim)],
+        )
+        .drop("__proj")
+    )
 
 
 def lsh_topk(
@@ -1511,10 +1576,10 @@ def pq_encode_expr(vec: str, codebooks: np.ndarray) -> Column:
 
 
 def pq_encode_kernel(codebooks: np.ndarray):
-    """Arrow-kernel twin of pq_encode_expr for wide configs (the
-    expression form's codegen grows with m*ksub*dsub; past a few
-    hundred codewords the vectorized kernel wins — same crossover
-    story as kmeans_assign_kernel). The subspace distance is
+    """Arrow-kernel twin of pq_encode_expr, the corpus encode of
+    pq_adc_topk and ivf_pq_topk (the expression form's codegen grows
+    with m*ksub*dsub; past a few hundred codewords the vectorized
+    kernel wins). The subspace distance is
     accumulated SEQUENTIALLY over dims (not numpy pairwise-sum) so
     argmin ties resolve identically to the expression form —
     equivalence-tested."""
@@ -1547,7 +1612,6 @@ def pq_adc_topk(
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
     round_dp: int = 6,
-    use_kernel: bool = False,
 ) -> DataFrame:
     """ADC top-k: encode the corpus to PQ codes, precompute each
     query's m x ksub distance table ONCE (query-side projection —
@@ -1555,15 +1619,13 @@ def pq_adc_topk(
     array lookups + adds. The corpus never shuffles and the scan reads
     only the codes; ranking is (distance asc, id asc) row_number,
     self-matches excluded. Distances are exact re-plays of the table
-    arithmetic, rounded at the result boundary only."""
+    arithmetic, rounded at the result boundary only. The corpus encode
+    is the Arrow kernel (pq_encode_kernel); pq_encode_expr is its
+    replayable reference."""
     from pyspark.sql import Window
 
     m = codebooks.shape[0]
-    enc = (
-        pq_encode_kernel(codebooks)(F.col(vec_col))
-        if use_kernel
-        else pq_encode_expr(vec_col, codebooks)
-    )
+    enc = pq_encode_kernel(codebooks)(F.col(vec_col))
     codes = corpus.select(F.col(id_col), enc.alias("__codes"))
     qt = queries.select(
         F.col(query_id_col),
@@ -1630,7 +1692,6 @@ def ivf_pq_topk(
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
     round_dp: int = 6,
-    use_kernel: bool = False,
 ) -> DataFrame:
     """IVF-PQ: the canonical billion-scale ANN composition (Jégou et
     al. §V) — coarse quantizer routes vectors into inverted lists,
@@ -1642,11 +1703,7 @@ def ivf_pq_topk(
     _ivf_assign_col / probe col dispatchers); scoring is the exact pq_adc_topk
     tail — the [Q] oracle composes the same two replays."""
     m = codebooks.shape[0]
-    enc = (
-        pq_encode_kernel(codebooks)(F.col(vec_col))
-        if use_kernel
-        else pq_encode_expr(vec_col, codebooks)
-    )
+    enc = pq_encode_kernel(codebooks)(F.col(vec_col))
     assign = _ivf_assign_col(centroids)
     lists = corpus.select(
         F.col(id_col),

@@ -1307,7 +1307,7 @@ def pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = pq_adc_topk(emb, queries, pq_codebooks(), k=5, use_kernel=True)
+    out = pq_adc_topk(emb, queries, pq_codebooks(), k=5)
     return out.select(
         "query_id", "vec_id", "adc_dist", F.col("rnk").cast("long").alias("rnk")
     )
@@ -1364,7 +1364,6 @@ def ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_codebooks(),
         k=5,
         nprobe=4,
-        use_kernel=True,
     )
     return out.select(
         "query_id", "vec_id", "adc_dist", F.col("rnk").cast("long").alias("rnk")

@@ -36,6 +36,10 @@ same code deploys unchanged to a multi-executor cluster:
   to ``sys.path`` gets a new importer and a rewritten archive a new
   stat, so imports resolve as before. ``python_worker_cpu`` reads the
   workers' CPU.
+- The workers' PYTHONPATH holds the directory this package sits in.
+  The JVM starts the daemon with ``python -m`` in the driver's working
+  directory and adds only pyspark.zip, py4j and the spark-core jar, so
+  otherwise Python tasks failed outside the repository root.
 
 ``overlap`` is the one way the package runs independent driver jobs
 concurrently on the shared session.
@@ -50,6 +54,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -83,6 +88,7 @@ def get_spark(
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.python.daemon.module", "tastytrade_sdk_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

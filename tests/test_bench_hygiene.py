@@ -7,11 +7,12 @@ prior)."""
 import importlib.util
 import json
 import sys
+from pathlib import Path
 
 
 def _load_bench():
     spec = importlib.util.spec_from_file_location(
-        "bench_under_test", "/root/repo/bench.py"
+        "bench_under_test", Path(__file__).resolve().parent.parent / "bench.py"
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["bench_under_test"] = mod

@@ -495,36 +495,6 @@ def test_near_dup_clusters_dedups_duplicate_doc_ids(spark):
     assert sorted(r["doc_id"] for r in out) == [1, 2, 9]
 
 
-def test_kmeans_assign_kernel_matches_expression_path(spark):
-    """The Arrow matmul assignment (large-k scale path) must agree
-    with the spliced-literal expression path (exact-oracle path) on a
-    shared small k: same cluster ids, same unit vectors."""
-    import numpy as np
-
-    from tastytrade_sdk_spark.llmops.cluster import (
-        kmeans_assign,
-        kmeans_assign_kernel,
-    )
-    from tastytrade_sdk_spark.llmops.similarity import hyperplanes
-
-    m = hyperplanes(8, 16, seed=5)
-    m = m / np.linalg.norm(m, axis=1, keepdims=True)
-    rng = np.random.default_rng(2)
-    rows = [(i, rng.normal(size=16).tolist()) for i in range(120)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = {
-        r["vec_id"]: r["__cluster"]
-        for r in kmeans_assign(df, m).select("vec_id", "__cluster").collect()
-    }
-    b = {
-        r["vec_id"]: r["__cluster"]
-        for r in kmeans_assign_kernel(df, m)
-        .select("vec_id", "__cluster")
-        .collect()
-    }
-    assert a == b
-
-
 def test_star_contraction_matches_union_find_on_random_graphs(spark):
     """Large-star/small-star CC must label identically to the
     union-find path on arbitrary random graphs (including isolated

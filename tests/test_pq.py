@@ -6,8 +6,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tastytrade_sdk_spark.llmops.similarity import (
+    _adc_score_topk,
     pq_adc_topk,
     pq_codebooks,
+    pq_dist_sql,
     pq_encode_expr,
     pq_encode_kernel,
     pq_train_codebooks,
@@ -95,8 +97,20 @@ def test_adc_kernel_path_identical(clustered):
     q = df.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    a = pq_adc_topk(df, q, cb, k=5, use_kernel=False).collect()
-    b = pq_adc_topk(df, q, cb, k=5, use_kernel=True).collect()
+    a = pq_adc_topk(df, q, cb, k=5).collect()
+    # the same ADC tail over codes from the expression encode
+    codes = df.select("vec_id", pq_encode_expr("embedding", cb).alias("__codes"))
+    qt = q.select(
+        "query_id",
+        *[
+            F.expr("array(" + ", ".join(pq_dist_sql("embedding", cb, j, "spark")) + ")")
+            .alias(f"__t{j}")
+            for j in range(cb.shape[0])
+        ],
+    )
+    b = _adc_score_topk(
+        codes.crossJoin(qt), cb.shape[0], 5, "vec_id", "query_id", 6
+    ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 

@@ -455,8 +455,53 @@ class TestStreamingOps:
         assert out["B"]["px"] == 20.0
         assert len(out) == 2
 
+    def test_latest_table_sink_keeps_last_per_key(self, spark, tmp_path):
+        """K2: each micro-batch is upserted on its keys, so the table
+        holds the highest-``order_by`` row per key across batches."""
+        from tastytrade_sdk_spark.streaming.sinks import latest_table_sink
+
+        schema = "sym string, seq long, px double"
+        src, table = str(tmp_path / "src"), str(tmp_path / "table")
+        batches = [
+            [("A", 1, 10.0), ("B", 3, 30.0), ("A", 2, 12.0)],
+            [("A", 4, 14.0), ("B", 2, 20.0), ("C", 1, 5.0)],
+        ]
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+            stream = spark.readStream.schema(schema).parquet(src)
+            q = (
+                latest_table_sink(stream, table, ["sym"], ["seq"], str(tmp_path / "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        got = {r["sym"]: (r["seq"], r["px"]) for r in spark.read.parquet(table).collect()}
+        assert got == {"A": (4, 14.0), "B": (3, 30.0), "C": (1, 5.0)}
+
 
 class TestBacktestReplay:
+    def test_interleave_timeframes_orders_time_then_interval(self, spark):
+        """O5: frames are tagged with their interval_ms and unioned by
+        name (missing columns null), ordered by time with the shorter
+        interval first on a tie."""
+        from tastytrade_sdk_spark.streaming.replay import interleave_timeframes
+
+        t = [BASE + dt.timedelta(minutes=m) for m in (0, 5, 10)]
+        five = spark.createDataFrame(
+            [(t[0], 1.0), (t[1], 2.0), (t[2], 3.0)], "time timestamp, close double"
+        )
+        one = spark.createDataFrame(
+            [(t[1], 9.0, 1), (t[0], 8.0, 1)], "time timestamp, close double, n int"
+        )
+        out = interleave_timeframes([(five, 300_000), (one, 60_000)]).collect()
+        assert [(r["time"], r["interval_ms"], r["close"], r["n"]) for r in out] == [
+            (t[0], 60_000, 8.0, 1),
+            (t[0], 300_000, 1.0, None),
+            (t[1], 60_000, 9.0, 1),
+            (t[1], 300_000, 2.0, None),
+            (t[2], 300_000, 3.0, None),
+        ]
+
     def test_backtest_warmup_and_entry_price(self, spark):
         from tastytrade_sdk_spark.streaming.replay import run_backtest, warmup_days_for
 

@@ -11,12 +11,17 @@ re-reads an archive only when its stat changed.
 from __future__ import annotations
 
 import importlib
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
+from pathlib import Path
 
 import pandas as pd
 import pytest
 
+import tastytrade_sdk_spark
 import tastytrade_sdk_spark.worker_daemon  # noqa: F401 — patches zipimporter
 from tastytrade_sdk_spark.session import python_worker_cpu
 
@@ -90,3 +95,30 @@ def test_python_worker_cpu_counts_task_cpu(spark):
     before = python_worker_cpu(spark)
     spark.range(1).groupBy("id").applyInPandas(burn, "id long").collect()
     assert python_worker_cpu(spark) - before >= 0.45
+
+
+def test_workers_import_the_package_from_any_working_directory(tmp_path):
+    """A driver that imports the package through ``sys.path`` and runs
+    outside the repository root still gets working Python tasks: the
+    daemon module and the package's kernels import on the workers."""
+    root = Path(tastytrade_sdk_spark.__file__).resolve().parent.parent
+    script = tmp_path / "drive.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(root)!r})
+        from tastytrade_sdk_spark.llmops.multimodal import extract_features
+        from tastytrade_sdk_spark.session import get_spark
+
+        spark = get_spark("any_cwd", cpus=1)
+        print(spark.sparkContext.parallelize([1, 2, 3]).map(lambda x: x + 1).collect())
+        df = spark.createDataFrame([(1, b"ab"), (2, b"cd")], "doc_id long, payload binary")
+        print(extract_features(df, n_features=4).count())
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_LOCAL_DIRS"] = str(tmp_path)
+    run = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[-4:] == ["[2,", "3,", "4]", "2"]

@@ -25,10 +25,11 @@ Writes a markdown table to stdout (redirect to PLANS.md to snapshot).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tastytrade_sdk_spark.session import get_spark
 

@@ -27,7 +27,8 @@ import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tastytrade_sdk_spark.session import codegen_compiles, get_spark, python_worker_cpu
 
@@ -49,7 +50,7 @@ def main() -> None:
     names: list[str] = []
     for n in args.names:
         if n.startswith("top") and n[3:].isdigit():
-            with open("/root/repo/BENCH_LOCAL.json") as f:
+            with open(f"{ROOT}/BENCH_LOCAL.json") as f:
                 q = json.load(f)["queries"]
             names += [k for k, _ in sorted(
                 q.items(), key=lambda kv: -kv[1])[: int(n[3:])]]
@@ -65,7 +66,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     if args.mode in ("plan", "both"):
-        outdir = f"/root/repo/plans/r{args.round}"
+        outdir = f"{ROOT}/plans/r{args.round}"
         os.makedirs(outdir, exist_ok=True)
         for name in names:
             df = queries[name](spark, args.sf)

@@ -23,7 +23,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -193,20 +193,15 @@ def semdedup_scaled_demo(spark, sf_dir: str, mult: int) -> None:
     """SemDeDup's scale lever, measured: the fixed-k [Q] form is
     k*(n/k)^2 — quadratic once n outgrows k (the 100x probe shows it).
     The paper's recipe grows k with the corpus so cluster size stays
-    constant; at large k the centroid assignment moves from spliced
-    literal folds to the Arrow matmul kernel
-    (cluster.kmeans_assign_kernel). This demo runs the SAME prune with
-    k = 16*mult and prints both wall times."""
+    constant; past CENTROID_EXPR_MAX k·d kmeans_assign moves from
+    spliced literal folds to the Arrow matmul by itself. This demo
+    runs the SAME prune (cluster.semdedup_prune) with k = 16*mult and
+    prints its wall time."""
     import time as _t
 
     import numpy as np
 
-    from pyspark.sql import functions as F
-
-    from tastytrade_sdk_spark.llmops.cluster import (
-        kmeans_assign_kernel,
-        semdedup_prune_assigned,
-    )
+    from tastytrade_sdk_spark.llmops.cluster import semdedup_prune
     from tastytrade_sdk_spark.llmops.similarity import hyperplanes
     from tastytrade_sdk_spark.sources.tables import load_table
 
@@ -217,12 +212,7 @@ def semdedup_scaled_demo(spark, sf_dir: str, mult: int) -> None:
     def run_once() -> float:
         t0 = _t.perf_counter()
         emb = load_table(spark, "embeddings", sf_dir)
-        slim = kmeans_assign_kernel(emb, m).select(
-            F.col("vec_id"),
-            F.col("__cluster").alias("cluster_id"),
-            "__unit",
-        ).repartition(spark.sparkContext.defaultParallelism)
-        out = semdedup_prune_assigned(slim, "vec_id", threshold=0.4)
+        out = semdedup_prune(emb, m, "vec_id", threshold=0.4)
         out.write.format("noop").mode("overwrite").save()
         return _t.perf_counter() - t0
 
