@@ -582,6 +582,18 @@ def _ivf_assign_col(cent: "np.ndarray"):
     return lambda vec: centroid_argmax(vec, cent)["i"]
 
 
+def _ivf_list_key(cent: "np.ndarray"):
+    """``_ivf_assign_col`` as the corpus-side key of an inner join with
+    probe lists. A vector that gets no list (null vector or component)
+    takes -1, which no probe list holds, so the join drops it as
+    before; and the key is NOT NULL. On a nullable key the join's
+    inferred ``isnotnull(__list)`` is pushed through the projection to
+    the scan with ``__list`` replaced by the assign fold, so the fold
+    ran twice per corpus row (Filter + Project)."""
+    assign = _ivf_assign_col(cent)
+    return lambda vec: F.coalesce(assign(vec), F.lit(-1))
+
+
 def _ivf_probe_col(cent: "np.ndarray", nprobe: int):
     """Column function: query vector -> its nprobe nearest list ids,
     score descending with ascending-index tiebreak (the oracle's
@@ -625,10 +637,8 @@ def ivf_topk(
         else ivf_centroids(corpus, vec_col, n_lists=n_lists, seed=seed)
     )
 
-    assign_col = _ivf_assign_col(cent)
-
     cb = _spread(corpus.select(id_col, vec_col)).withColumn(
-        "__list", assign_col(F.col(vec_col))
+        "__list", _ivf_list_key(cent)(F.col(vec_col))
     )
 
     # each query probes its nprobe nearest lists
@@ -687,7 +697,7 @@ def graph_expand_topk(
     # entry assignment was the last ArrowEvalPython pass in this
     # path); trained centroids keep the vectorized UDFs
     asg = corpus.select(
-        id_col, _ivf_assign_col(centroids)(F.col(vec_col)).alias("__list")
+        id_col, _ivf_list_key(centroids)(F.col(vec_col)).alias("__list")
     )
     qb = queries.select(
         F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
@@ -784,7 +794,7 @@ def ann_recall_curve(
     )
     max_np = max(nprobes)
     cb = _spread(corpus.select(id_col, vec_col)).withColumn(
-        "__list", _ivf_assign_col(cent)(F.col(vec_col))
+        "__list", _ivf_list_key(cent)(F.col(vec_col))
     )
     qb = queries.select(
         F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")

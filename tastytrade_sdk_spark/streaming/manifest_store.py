@@ -31,7 +31,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tastytrade_sdk_spark.streaming.sinks import atomic_write
+from tastytrade_sdk_spark.streaming.sinks import _keep_last_merge, atomic_write
 
 _LATEST = "_latest"
 
@@ -67,15 +67,19 @@ def publish_version(df: DataFrame, root: str) -> int:
     return version
 
 
+def _data_dir(root: str, version: int) -> str:
+    """The data directory a committed version's manifest points at."""
+    with open(os.path.join(root, f"_manifest.{version}.json")) as f:
+        return json.load(f)["data_dir"]
+
+
 def read_version(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
     """Load a committed snapshot (default: latest). Raises if nothing
     has been committed yet."""
     v = current_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed version under {root}")
-    with open(os.path.join(root, f"_manifest.{v}.json")) as f:
-        manifest = json.load(f)
-    return spark.read.parquet(manifest["data_dir"])
+    return spark.read.parquet(_data_dir(root, v))
 
 
 def prune_versions(root: str, keep: int = 2) -> list[int]:
@@ -327,14 +331,12 @@ def versioned_upsert_batch(
 ) -> int:
     """K2/K4 keep-last upsert publishing through the manifest store:
     merge the micro-batch with the latest committed snapshot, commit
-    as a new version. Readers mid-merge keep seeing the old version."""
-    from tastytrade_sdk_spark.operators.dedup import keep_last
-
-    spark = batch_df.sparkSession
-    new = keep_last(batch_df, keys, order_by)
-    if current_version(root) is not None:
-        existing = read_version(spark, root)
-        merged = keep_last(existing.unionByName(new), keys, order_by)
-    else:
-        merged = new
+    as a new version. Readers mid-merge keep seeing the old version.
+    The merge is upsert_parquet_batch's (sinks._keep_last_merge): the
+    snapshot read with its footer schema, one keep-last window over
+    snapshot ∪ batch in one partition, one job writing one file."""
+    v = current_version(root)
+    merged = _keep_last_merge(
+        batch_df, None if v is None else _data_dir(root, v), keys, order_by
+    )
     return publish_version(merged, root)

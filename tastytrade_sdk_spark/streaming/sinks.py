@@ -14,19 +14,83 @@ idempotent-merge one: replayed micro-batches re-upsert the same keys
 and converge (the property the reference relies on for reconnect
 backfill, SURVEY ST7). On a lake deployment this becomes a Delta/
 Iceberg MERGE with no code change upstream of the sink function.
+
+Cost model of a keep-last upsert (``upsert_parquet_batch`` and
+manifest_store.versioned_upsert_batch): ONE Spark job, one stage, one
+task per micro-batch. The table's schema comes from the Spark schema
+stored in its own parquet footer (no inference job), table ∪ batch is
+coalesced into one partition (which already satisfies the keep-last
+window's clustering, so the plan has no Exchange), and the table is
+written back as one file, which the next micro-batch reads in one
+task. The work is O(table + batch) in a single task rather than an
+O(table) shuffle over many small tasks: at the latest-value table
+sizes a live feed keeps (keys = symbols or bars) the per-trigger
+fixed cost of jobs and tasks is what dominates; SCALING.md records the
+table size where the single task's merge time takes over.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
 from collections.abc import Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tastytrade_sdk_spark.operators.dedup import keep_last
+
+
+# the footer key under which Spark stores the schema it wrote a
+# parquet file with (the one schema inference would read back)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(table_dir: str) -> StructType:
+    """The Spark schema of a Spark-written parquet table, read on the
+    driver from the footer of one of its data files (well under 1 ms)
+    instead of by an inference job. Every file of the table was
+    written with the same schema, so any one of them serves."""
+    files = sorted(
+        f for f in os.listdir(table_dir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    if not files:
+        raise FileNotFoundError(f"{table_dir}: no parquet data file")
+    meta = pq.read_schema(os.path.join(table_dir, files[0])).metadata
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
+def _keep_last_merge(
+    batch_df: DataFrame,
+    table_dir: "str | None",
+    keys: Sequence[str],
+    order_by: Sequence[str],
+) -> DataFrame:
+    """The keep-last merge of both upsert sinks: the last row per key
+    of (table ∪ batch), or of the batch alone when there is no table
+    yet (``table_dir`` None).
+
+    ONE keep-last window over the union instead of reducing the batch
+    first and re-reducing the union: order_by is a total order per key
+    by contract, so the winner of the union equals the winner of
+    {winner(batch)} ∪ table (r11, guide §2.4). The union is coalesced
+    into one partition, which satisfies the window's clustering, so
+    the plan has no Exchange: writing the result is one job with one
+    stage and one task, and it writes one file. ``unionByName`` keeps
+    its type widening and raises, before anything is written, on a
+    batch whose columns differ from the table's."""
+    rows = batch_df
+    if table_dir is not None:
+        existing = batch_df.sparkSession.read.schema(
+            _footer_schema(table_dir)
+        ).parquet(table_dir)
+        rows = existing.unionByName(batch_df)
+    return keep_last(rows.coalesce(1), keys, order_by)
 
 
 def upsert_parquet_batch(
@@ -36,6 +100,12 @@ def upsert_parquet_batch(
     order_by: Sequence[str],
 ) -> None:
     """Merge one micro-batch into a keep-last parquet table.
+
+    One Spark job, one stage, one task (``_keep_last_merge``): the
+    table is read with the schema from its own footer, merged with the
+    batch in one partition and written back as one file, so the cost
+    per micro-batch is O(table + batch) in a single task, with no
+    inference job and no shuffle.
 
     Executor-side write to a sibling tmp dir, then directory swap —
     never routes the table through the driver (a collect() here would
@@ -49,7 +119,6 @@ def upsert_parquet_batch(
     snapshot isolation. On a lake deployment this whole dance becomes
     a Delta/Iceberg MERGE.
     """
-    spark = batch_df.sparkSession
     tmp, old = path + ".__tmp", path + ".__old"
     # crash recovery FIRST: a previous run that died between its two
     # renames left the full table under `old` and no `path` — restore
@@ -59,18 +128,9 @@ def upsert_parquet_batch(
     for d in (tmp, old):
         if os.path.exists(d):
             shutil.rmtree(d)
-    # ONE keep-last window over (existing ∪ batch) instead of reducing
-    # the batch first and re-reducing the union: order_by is a total
-    # order per key by contract, so the winner of the union equals the
-    # winner of {winner(batch)} ∪ existing — same row, one fewer
-    # window shuffle per micro-batch (r11, guide §2.4)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        merged = keep_last(
-            existing.unionByName(batch_df), keys, order_by
-        )
-    else:
-        merged = keep_last(batch_df, keys, order_by)
+    merged = _keep_last_merge(
+        batch_df, path if os.path.exists(path) else None, keys, order_by
+    )
     merged.write.mode("overwrite").parquet(tmp)
     if os.path.exists(path):
         os.rename(path, old)

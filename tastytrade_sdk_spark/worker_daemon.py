@@ -32,10 +32,19 @@ The result is the same as before:
 
 What it does not see is a rewrite that keeps the size, both
 timestamps and the inode, the limit of any stat-based cache check.
+
+Run as the daemon, it also imports numpy, pandas, pyarrow and
+pyspark's Arrow serializers before it forks, so every worker inherits
+them instead of importing them itself, and then moves everything it
+holds into the permanent GC generation (``gc.freeze()``). A reused
+worker runs ``gc.collect()`` after every task; over a heap holding
+pandas and pyarrow (about 73 000 objects) that took about 24 ms a
+call, and frozen objects are never traversed again.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -73,6 +82,10 @@ zipimport.zipimporter.invalidate_caches = _invalidate_caches
 
 
 if __name__ == "__main__":
+    import numpy  # noqa: F401 — imported once here, inherited by every fork
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    import pyspark.sql.pandas.serializers  # noqa: F401
     from pyspark.daemon import manager
 
     # read each archive imported from so far once, so that every one
@@ -80,4 +93,6 @@ if __name__ == "__main__":
     for importer in list(sys.path_importer_cache.values()):
         if isinstance(importer, zipimport.zipimporter):
             importer.invalidate_caches()
+    gc.collect()
+    gc.freeze()
     manager()

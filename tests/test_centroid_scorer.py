@@ -197,6 +197,25 @@ def test_plan_holds_each_literal_row_once(vectors):
         assert _plan(out).count(first) == 1
 
 
+@pytest.mark.parametrize("search", ["ivf_topk", "ann_recall_curve"])
+def test_trained_ivf_assigns_each_corpus_row_once(vectors, search):
+    """The list join must not infer a null guard on the corpus-side
+    assign fold: pushed to the scan, it evaluated the fold a second
+    time per row (Filter beside the Project)."""
+    _, df = vectors
+    cent = _centroids(SMALL_K)
+    queries = df.limit(5).withColumnRenamed("vec_id", "query_id")
+    out = getattr(S, search)(df, queries, centroids=cent, k=3)
+    out.collect()
+    final = _plan(out).split("== Initial Plan ==")[0]
+    first = repr(float(cent[0, 0]))
+    corpus_side = [
+        line for line in final.splitlines()
+        if first in line and "(embedding#" in line
+    ]
+    assert len(corpus_side) == 1, corpus_side
+
+
 # ---------------- single-scorer source guard ----------------
 
 ROOT = Path(tastytrade_sdk_spark.__file__).resolve().parent.parent

@@ -31,6 +31,27 @@ def test_upsert_recovers_from_crash_between_renames(spark, tmp_path):
     assert not os.path.exists(path + ".__tmp")
 
 
+def test_upsert_rejects_mismatched_batch_before_writing(spark, tmp_path):
+    """A batch whose column set differs from the table's raises before
+    anything is written: the table's files stay as they were."""
+    path = str(tmp_path / "latest")
+    upsert_parquet_batch(
+        _df(spark, [("A", 1, 10.0), ("B", 1, 5.0)]), path, ["sym"], ["seq"]
+    )
+    before = {
+        f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)
+    }
+    other = spark.createDataFrame([("A", 2, 11.0)], "sym string, seq int, bid double")
+    with pytest.raises(Exception, match="(?i)bid|px"):
+        upsert_parquet_batch(other, path, ["sym"], ["seq"])
+    assert {
+        f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)
+    } == before
+    assert not os.path.exists(path + ".__tmp")
+    snap = {r["sym"]: r["px"] for r in spark.read.parquet(path).collect()}
+    assert snap == {"A": 10.0, "B": 5.0}
+
+
 def test_connected_components_raises_on_non_convergence(spark):
     from tastytrade_sdk_spark.llmops.cluster import connected_components
 

@@ -2,6 +2,7 @@
 equivalence (ST6), watermarked candles, latest-table, upsert sinks."""
 
 import datetime as dt
+import os
 import shutil
 import tempfile
 
@@ -454,6 +455,64 @@ class TestStreamingOps:
         assert out["A"]["px"] == 11.0 and out["A"]["seq"] == 2
         assert out["B"]["px"] == 20.0
         assert len(out) == 2
+
+    @pytest.mark.parametrize("sink", ["upsert_parquet_batch", "versioned_upsert_batch"])
+    def test_upsert_merges_in_one_job_one_stage(self, spark, tmp_path, sink):
+        """Merging a batch into an existing keep-last table is one job
+        with one stage and one task: the table's schema comes from its
+        parquet footer (no inference job) and table ∪ batch is merged
+        in one partition (no Exchange). The result is one data file."""
+        from tastytrade_sdk_spark.streaming.manifest_store import (
+            _data_dir,
+            current_version,
+            versioned_upsert_batch,
+        )
+        from tastytrade_sdk_spark.streaming.sinks import upsert_parquet_batch
+
+        path = str(tmp_path / "table")
+        if sink == "upsert_parquet_batch":
+            upsert, data_dir = upsert_parquet_batch, lambda: path
+        else:
+            upsert = versioned_upsert_batch
+            data_dir = lambda: _data_dir(path, current_version(path))  # noqa: E731
+        schema = "sym string, seq long, px double"
+        upsert(spark.createDataFrame(
+            [("A", 1, 10.0), ("B", 1, 20.0), ("C", 1, 30.0)], schema
+        ).repartition(3), path, ["sym"], ["seq"])
+        sc, group = spark.sparkContext, f"one-job-{sink}"
+        tracker = sc.statusTracker()
+        sc.setJobGroup(group, "keep-last upsert into an existing table")
+        try:
+            upsert(spark.createDataFrame([("A", 2, 11.0), ("D", 1, 40.0)], schema),
+                   path, ["sym"], ["seq"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) == 1
+        stages = list(tracker.getJobInfo(jobs[0]).stageIds)
+        assert len(stages) == 1
+        assert tracker.getStageInfo(stages[0]).numTasks == 1
+        run = spark._jsparkSession.sharedState().statusStore().executionsList().last()
+        assert run.jobs().contains(jobs[0])
+        assert "Exchange" not in run.physicalPlanDescription()
+        files = [f for f in os.listdir(data_dir()) if f.endswith(".parquet")]
+        assert len(files) == 1
+        got = {r["sym"]: r["px"] for r in spark.read.parquet(data_dir()).collect()}
+        assert got == {"A": 11.0, "B": 20.0, "C": 30.0, "D": 40.0}
+
+    def test_upsert_empty_batch_keeps_rows(self, spark, tmp_path):
+        from tastytrade_sdk_spark.streaming.sinks import upsert_parquet_batch
+
+        path = str(tmp_path / "table")
+        schema = "sym string, seq long, px double"
+        upsert_parquet_batch(
+            spark.createDataFrame([("A", 1, 10.0), ("B", 2, 20.0)], schema),
+            path, ["sym"], ["seq"],
+        )
+        upsert_parquet_batch(spark.createDataFrame([], schema), path, ["sym"], ["seq"])
+        got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+        assert got == [("A", 1, 10.0), ("B", 2, 20.0)]
 
     def test_latest_table_sink_keeps_last_per_key(self, spark, tmp_path):
         """K2: each micro-batch is upserted on its keys, so the table

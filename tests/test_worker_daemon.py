@@ -56,6 +56,21 @@ def test_session_workers_keep_zip_directory_cache(spark):
     assert [r["replaced"] for r in rows] == [0] * len(rows)
 
 
+def test_workers_fork_with_frozen_preimported_heap(spark):
+    """The daemon imports pandas before it forks and freezes its heap,
+    so a plain Python task (which imports no pandas itself) finds
+    pandas loaded and a non-empty permanent GC generation."""
+
+    def probe(_):
+        import gc
+        import sys
+
+        return gc.get_freeze_count(), "pandas" in sys.modules
+
+    rows = spark.sparkContext.parallelize(range(2), 2).map(probe).collect()
+    assert all(frozen > 0 and has_pandas for frozen, has_pandas in rows), rows
+
+
 def test_rewritten_archive_is_reread(tmp_path, monkeypatch):
     archive = tmp_path / "mods.zip"
     with zipfile.ZipFile(archive, "w") as z:
