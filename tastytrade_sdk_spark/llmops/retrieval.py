@@ -30,7 +30,11 @@ from pyspark.sql import functions as F
 
 from tastytrade_sdk_spark.llmops.textops import tokens_expr
 from tastytrade_sdk_spark.session import overlap
-from tastytrade_sdk_spark.streaming.sinks import atomic_write
+from tastytrade_sdk_spark.streaming.sinks import (
+    atomic_write,
+    dir_commit,
+    parquet_files,
+)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -373,7 +377,9 @@ def bm25_index_write(
 
     The repartition spreads hot buckets (stopword terms) over
     (bucket, term) so no single task serializes a heavy bucket —
-    same skew story as the IVF clustered writes.
+    same skew story as the IVF clustered writes. A rebuild commits
+    through sinks.dir_commit, so a failed rebuild leaves the previous
+    index (postings, doclen and stats of one generation) searchable.
     """
     # spread=False: the write path repartitions by (bucket, term)
     # immediately and streamed triggers call this per micro-batch —
@@ -381,7 +387,9 @@ def bm25_index_write(
     # measured ~3 s across a 4-trigger lifecycle (r11 session 2)
     postings = build_postings(docs, text_col, id_col, spread=False)
     dl = doc_lengths(docs, text_col, id_col, spread=False)
-    return _write_batch_layout(postings, dl, n_buckets, path)
+    with dir_commit(path) as tmp:
+        stats = _write_batch_layout(postings, dl, n_buckets, tmp)
+    return stats
 
 
 def _write_batch_layout(
@@ -782,77 +790,43 @@ def bm25_index_compact(spark, path: str, id_col: str = "doc_id") -> dict:
     frequencies are re-aggregated across epochs per (term, doc) —
     identical search results by construction (equivalence-tested).
 
-    WRITER MUST BE QUIESCED (same directory-swap contract as
-    compact_parquet_table): the rewrite lands in a sibling tmp dir
-    and swaps in with restore-before-delete crash recovery — a crash
-    between the two renames is healed on the next call, and the only
-    copy is never deleted before the replacement is complete."""
+    WRITER MUST BE QUIESCED: the rewrite commits through
+    sinks.dir_commit, which aborts with the index untouched if a
+    stream batch lands meanwhile."""
     import json
     import os
-    import shutil
 
-    tmp, old = path + ".__tmp", path + ".__old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    for d in (tmp, old):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    # n_buckets: streamed layout carries _layout.json; an already-
-    # compacted index carries it in _stats.json (re-compaction is a
-    # valid no-op-shaped rewrite)
-    layout_path = os.path.join(path, "_layout.json")
-    stats_path = os.path.join(path, _BM25_STATS)
-    if os.path.exists(layout_path):
+    with dir_commit(path) as tmp:
+        # n_buckets: streamed layout carries _layout.json; an already-
+        # compacted index carries it in _stats.json (re-compaction is
+        # a valid no-op-shaped rewrite)
+        layout_path = os.path.join(path, "_layout.json")
+        if not os.path.exists(layout_path):
+            layout_path = os.path.join(path, _BM25_STATS)
         with open(layout_path) as fh:
             n_buckets = json.load(fh)["n_buckets"]
-    else:
-        with open(stats_path) as fh:
-            n_buckets = json.load(fh)["n_buckets"]
-
-    def _listing() -> "list[str]":
-        files = []
-        for base, _, names in os.walk(path):
-            rel = os.path.relpath(base, path)
-            files.extend(
-                os.path.join(rel, f) for f in names if f.endswith(".parquet")
-            )
-        return sorted(files)
-
-    before = _listing()
-    # all-empty streamed index (only empty epochs ever ran): postings/
-    # doclen have no data files (the per-epoch stats rows do exist) —
-    # nothing to rewrite, and reading postings would fail (same state
-    # bm25_index_topk short-circuits)
-    if not any(f.startswith("postings") for f in before):
-        return {"n_docs": 0, "sum_dl": 0, "n_buckets": n_buckets}
-    postings = (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .groupBy("term", id_col)
-        .agg(F.sum("tf").alias("tf"))
-    )
-    # dl stays lazy — _write_batch_layout checkpoints it after the
-    # postings write is submitted (overlap)
-    dl = spark.read.parquet(os.path.join(path, "doclen")).select(
-        id_col, "dl"
-    )
-    stats = _write_batch_layout(postings, dl, n_buckets, tmp)
-    # keep _layout.json so a RE-compaction and the stream-batch guard
-    # both keep working on the compacted index
-    atomic_write(
-        os.path.join(tmp, "_layout.json"), json.dumps({"n_buckets": n_buckets})
-    )
-    # concurrent-writer detection (same contract as
-    # compact_parquet_table): a micro-batch that landed during the
-    # rewrite would ride into .__old and be deleted with it — re-check
-    # the listing immediately before the swap and ABORT untouched
-    if _listing() != before:
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"bm25_index_compact: {path} changed during compaction "
-            "(concurrent writer?) — aborted, index untouched; quiesce "
-            "the sink and retry"
+        postings_dir = os.path.join(path, "postings")
+        # all-empty streamed index (only empty epochs ever ran):
+        # postings/doclen have no data files — nothing to rewrite, and
+        # reading postings would fail (same state bm25_index_topk
+        # short-circuits)
+        if not parquet_files(postings_dir):
+            return {"n_docs": 0, "sum_dl": 0, "n_buckets": n_buckets}
+        postings = (
+            spark.read.parquet(postings_dir)
+            .groupBy("term", id_col)
+            .agg(F.sum("tf").alias("tf"))
         )
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+        # dl stays lazy — _write_batch_layout checkpoints it after the
+        # postings write is submitted (overlap)
+        dl = spark.read.parquet(os.path.join(path, "doclen")).select(
+            id_col, "dl"
+        )
+        stats = _write_batch_layout(postings, dl, n_buckets, tmp)
+        # keep _layout.json so a RE-compaction and the stream-batch
+        # guard both keep working on the compacted index
+        atomic_write(
+            os.path.join(tmp, "_layout.json"),
+            json.dumps({"n_buckets": n_buckets}),
+        )
     return stats

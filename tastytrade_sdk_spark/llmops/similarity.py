@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tastytrade_sdk_spark.session import overlap
-from tastytrade_sdk_spark.streaming.sinks import atomic_write
+from tastytrade_sdk_spark.streaming.sinks import atomic_write, dir_commit
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1349,40 +1349,45 @@ def ivf_index_write(
     partition pruning (directory-level elimination at planning time,
     visible as PartitionFilters in the scan). At lake scale the index
     is maintained like any other table: append new vectors to their
-    list directories, compact per partition."""
+    list directories, compact per partition.
+
+    A rebuild commits through sinks.dir_commit, so a failed rebuild
+    leaves the previous index (data and digest) searchable."""
     import os
 
     assign_col = _ivf_assign_col(centroids)
-    (
-        # no _spread: the (list, salt) repartition follows immediately
-        # and the JVM assign is cheap per row — the spread's probe +
-        # extra vector exchange bought nothing once routing left the
-        # Python boundary (r12 A/B; the stream-batch rule)
-        corpus.select(id_col, vec_col)
-        .withColumn("list_id", assign_col(F.col(vec_col)))
-        # cluster the write by (list, bounded salt): without it every
-        # upstream task writes a sliver into every list directory
-        # (tasks x lists tiny files — the small-file problem the
-        # compaction tool exists to fix); clustering by list_id ALONE
-        # would serialize each list into one task (IVF lists are
-        # naturally skewed — a hot centroid becomes a straggler/OOM at
-        # lake scale), so the salt bounds files-per-list at
-        # _IVF_FILES_PER_LIST while keeping hot lists parallel
-        .repartition(
-            F.col("list_id"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(_IVF_FILES_PER_LIST)),
+    with dir_commit(path) as tmp:
+        (
+            # no _spread: the (list, salt) repartition follows
+            # immediately and the JVM assign is cheap per row — the
+            # spread's probe + extra vector exchange bought nothing
+            # once routing left the Python boundary (r12 A/B; the
+            # stream-batch rule)
+            corpus.select(id_col, vec_col)
+            .withColumn("list_id", assign_col(F.col(vec_col)))
+            # cluster the write by (list, bounded salt): without it
+            # every upstream task writes a sliver into every list
+            # directory (tasks x lists tiny files — the small-file
+            # problem the compaction tool exists to fix); clustering
+            # by list_id ALONE would serialize each list into one task
+            # (IVF lists are naturally skewed — a hot centroid becomes
+            # a straggler/OOM at lake scale), so the salt bounds
+            # files-per-list at _IVF_FILES_PER_LIST while keeping hot
+            # lists parallel
+            .repartition(
+                F.col("list_id"),
+                F.pmod(F.xxhash64(F.col(id_col)), F.lit(_IVF_FILES_PER_LIST)),
+            )
+            .write.mode("overwrite")
+            .partitionBy("list_id")
+            .parquet(tmp)
         )
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(path)
-    )
-    # stamp the routing identity (underscore-prefixed: invisible to
-    # the parquet reader); append/search verify it before touching
-    # the index, so the stamp is atomic — a torn digest would refuse
-    # every later append, stream batch and search
-    atomic_write(
-        os.path.join(path, "_centroids_md5"), _centroid_digest(centroids)
-    )
+        # stamp the routing identity (underscore-prefixed: invisible
+        # to the parquet reader); append/search verify it before
+        # touching the index
+        atomic_write(
+            os.path.join(tmp, "_centroids_md5"), _centroid_digest(centroids)
+        )
 
 
 def ivf_index_append(
@@ -1836,74 +1841,45 @@ def ivf_index_compact(
     one-shot build — no re-aggregation needed, unlike BM25's tf sums);
     results are identical by construction and equivalence-tested.
 
-    WRITER MUST BE QUIESCED: same tmp-then-swap with
-    restore-before-delete crash recovery and concurrent-writer
-    listing check as bm25_index_compact / compact_parquet_table.
-    Returns the number of vectors in the compacted index."""
+    WRITER MUST BE QUIESCED: the rewrite commits through
+    sinks.dir_commit, which aborts with the index untouched if a
+    stream batch lands meanwhile. Returns the number of vectors in the
+    compacted index."""
     import os
-    import shutil
 
-    tmp, old = path + ".__tmp", path + ".__old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    for d in (tmp, old):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    _check_centroid_sidecar(path, centroids, "ivf_index_compact")
-    layout = _ivf_layout(path)
-    if layout is None:
-        # sidecar-only index (every epoch so far was empty): nothing
-        # to rewrite, and spark.read.parquet would fail on a dataless
-        # tree — leave it; the stream sink keeps working
-        return 0
-    # "batch" is accepted too: re-compaction is a valid no-op-shaped
-    # rewrite (it still merges small files from appends)
-
-    def _listing() -> "list[str]":
-        files = []
-        for base, _, names in os.walk(path):
-            rel = os.path.relpath(base, path)
-            files.extend(
-                os.path.join(rel, f) for f in names if f.endswith(".parquet")
-            )
-        return sorted(files)
-
-    before = _listing()
-    # row count via observe ON the rewrite itself — the separate
-    # read-back count job re-scanned the whole compacted tree just to
-    # return n (guide §1.2: one job per computation)
     from pyspark.sql import Observation
 
-    obs = Observation()
-    rows = (
-        spark.read.parquet(path)
-        .select(id_col, vec_col, "list_id")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-    )
-    (
-        rows.repartition(
-            F.col("list_id"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(_IVF_FILES_PER_LIST)),
+    with dir_commit(path) as tmp:
+        _check_centroid_sidecar(path, centroids, "ivf_index_compact")
+        if _ivf_layout(path) is None:
+            # sidecar-only index (every epoch so far was empty):
+            # nothing to rewrite, and spark.read.parquet would fail on
+            # a dataless tree — leave it; the stream sink keeps working
+            return 0
+        # "batch" is accepted too: re-compaction is a valid
+        # no-op-shaped rewrite (it still merges small files from
+        # appends). Row count via observe ON the rewrite itself — a
+        # separate read-back count job re-scanned the whole compacted
+        # tree just to return n (guide §1.2: one job per computation)
+        obs = Observation()
+        rows = (
+            spark.read.parquet(path)
+            .select(id_col, vec_col, "list_id")
+            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(tmp)
-    )
-    n = int(obs.get["n"])
-    atomic_write(
-        os.path.join(tmp, "_centroids_md5"), _centroid_digest(centroids)
-    )
-    if _listing() != before:
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"ivf_index_compact: {path} changed during compaction "
-            "(concurrent writer?) — aborted, index untouched; quiesce "
-            "the sink and retry"
+        (
+            rows.repartition(
+                F.col("list_id"),
+                F.pmod(F.xxhash64(F.col(id_col)), F.lit(_IVF_FILES_PER_LIST)),
+            )
+            .write.mode("overwrite")
+            .partitionBy("list_id")
+            .parquet(tmp)
         )
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n
+        atomic_write(
+            os.path.join(tmp, "_centroids_md5"), _centroid_digest(centroids)
+        )
+    return int(obs.get["n"])
 
 
 # "auto" bucket sizing for the persisted k-NN graph index: one bucket
@@ -2115,97 +2091,83 @@ def knn_graph_index_write(
     The centroid digest sidecar guards routing identity exactly like
     the IVF index (same _check_centroid_sidecar).
 
-    ATOMIC REBUILD (r7 review): the three tables land in a sibling
-    tmp dir and swap in with restore-before-delete — three sequential
-    in-place overwrites would leave a torn mixed-generation index
-    (new edges + stale units, sidecar still valid) after a mid-rebuild
-    crash, and every guard would pass. Same protocol as
-    ivf_index_compact / bm25_index_compact; readers mid-swap fall back
-    to the .__old snapshot (readable_store_path)."""
+    ATOMIC REBUILD (r7 review): the three tables and the sidecars
+    commit in one sinks.dir_commit — three sequential in-place
+    overwrites would leave a torn mixed-generation index (new edges +
+    stale units, sidecar still valid) after a mid-rebuild crash, and
+    every guard would pass."""
     import json as _json
     import os
-    import shutil
 
-    tmp, old = path + ".__tmp", path + ".__old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    for d in (tmp,):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    units = with_unit_vector(corpus, vec_col).select(
-        id_col, "__unit"
-    ).localCheckpoint(eager=True)
-    if n_buckets == "auto":
-        # units is a checkpointed snapshot, so this count is free-ish
-        # and sizes the layout to the ACTUAL corpus (docstring above
-        # _auto_graph_buckets)
-        n_buckets = _auto_graph_buckets(units.count())
-    graph = nn_descent(
-        corpus, id_col=id_col, vec_col=vec_col, k=k, rounds=rounds,
-        rev_cap=rev_cap, units=units,
-    ).select(F.col(id_col).alias("src"), F.col("nbr_id").alias("dst"))
-    bucket = F.pmod(F.xxhash64(F.col("src")), F.lit(n_buckets))
+    with dir_commit(path) as tmp:
+        units = with_unit_vector(corpus, vec_col).select(
+            id_col, "__unit"
+        ).localCheckpoint(eager=True)
+        if n_buckets == "auto":
+            # units is a checkpointed snapshot, so this count is free-ish
+            # and sizes the layout to the ACTUAL corpus (docstring above
+            # _auto_graph_buckets)
+            n_buckets = _auto_graph_buckets(units.count())
+        graph = nn_descent(
+            corpus, id_col=id_col, vec_col=vec_col, k=k, rounds=rounds,
+            rev_cap=rev_cap, units=units,
+        ).select(F.col(id_col).alias("src"), F.col("nbr_id").alias("dst"))
+        bucket = F.pmod(F.xxhash64(F.col("src")), F.lit(n_buckets))
 
-    # the three tables are lineage-disjoint past the units checkpoint
-    # (edges <- NN-descent rounds; units <- the checkpointed snapshot;
-    # entry <- a corpus re-scan) and land in disjoint dirs under tmp,
-    # so the units and entry writes run as CONCURRENT jobs while the
-    # main thread drives the NN-descent rounds + edges write (guide
-    # §2.6 overlap-independent-jobs; the bm25 sidecar precedent). The
-    # sidecar stamp + swap still happen strictly last, so the atomic
-    # rebuild / torn-index story is unchanged.
-    def _write_edges():
-        # repartition to EXACTLY n_buckets partitions (not the
-        # session's shuffle default): one task and one file per bucket
-        # dir, so the write constant scales with the layout, not with
-        # a config knob
-        (
-            graph.withColumn("bucket", bucket)
-            .repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(tmp, "edges"))
-        )
-
-    def _write_units():
-        (
-            units.withColumn(
-                "bucket", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets))
+        # the three tables are lineage-disjoint past the units
+        # checkpoint (edges <- NN-descent rounds; units <- the
+        # checkpointed snapshot; entry <- a corpus re-scan) and land in
+        # disjoint dirs under tmp, so the units and entry writes run as
+        # CONCURRENT jobs while the main thread drives the NN-descent
+        # rounds + edges write (guide §2.6 overlap-independent-jobs).
+        # overlap joins every writer before it returns or raises, so
+        # the sidecar stamp + swap happen strictly last.
+        def _write_edges():
+            # repartition to EXACTLY n_buckets partitions (not the
+            # session's shuffle default): one task and one file per bucket
+            # dir, so the write constant scales with the layout, not with
+            # a config knob
+            (
+                graph.withColumn("bucket", bucket)
+                .repartition(n_buckets, "bucket")
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(os.path.join(tmp, "edges"))
             )
-            .repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(tmp, "units"))
-        )
 
-    def _write_entry():
-        assign = _ivf_assign_col(centroids)
-        # no _spread: the assign is a cheap JVM expression since the
-        # dispatcher change and the groupBy's partial aggregation
-        # follows immediately — the spread's probe + extra vector
-        # exchange measured as pure overhead (r12 A/B)
-        entry = (
-            corpus.select(id_col, vec_col)
-            .select(id_col, assign(F.col(vec_col)).alias("list_id"))
-            .groupBy("list_id")
-            .agg(F.min(id_col).alias("node"))
-        )
-        entry.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "entry")
-        )
+        def _write_units():
+            (
+                units.withColumn(
+                    "bucket",
+                    F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)),
+                )
+                .repartition(n_buckets, "bucket")
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(os.path.join(tmp, "units"))
+            )
 
-    overlap(_write_edges, _write_units, _write_entry)
-    with open(os.path.join(tmp, "_centroids_md5"), "w") as fh:
-        fh.write(_centroid_digest(centroids))
-    with open(os.path.join(tmp, "_graph_meta.json"), "w") as fh:
-        _json.dump({"k": k, "n_buckets": n_buckets}, fh)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+        def _write_entry():
+            assign = _ivf_assign_col(centroids)
+            # no _spread: the assign is a cheap JVM expression since the
+            # dispatcher change and the groupBy's partial aggregation
+            # follows immediately — the spread's probe + extra vector
+            # exchange measured as pure overhead (r12 A/B)
+            entry = (
+                corpus.select(id_col, vec_col)
+                .select(id_col, assign(F.col(vec_col)).alias("list_id"))
+                .groupBy("list_id")
+                .agg(F.min(id_col).alias("node"))
+            )
+            entry.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(tmp, "entry")
+            )
+
+        overlap(_write_edges, _write_units, _write_entry)
+        with open(os.path.join(tmp, "_centroids_md5"), "w") as fh:
+            fh.write(_centroid_digest(centroids))
+        with open(os.path.join(tmp, "_graph_meta.json"), "w") as fh:
+            _json.dump({"k": k, "n_buckets": n_buckets}, fh)
 
 
 def knn_graph_index_search(

@@ -19,9 +19,10 @@ Mechanics:
   without clustering every file spans the full range and nothing
   prunes) and, after the data lands, computes ONE aggregation pass
   grouped by ``input_file_name()`` to produce per-file min/max for the
-  requested stat columns. The stats sidecar is written tmp-then-rename
-  so a crash mid-write leaves no sidecar (readers fall back to a full
-  scan) rather than a partial one.
+  requested stat columns. The stats sidecar is committed by
+  streaming/sinks.dir_commit, so a crash mid-write leaves the previous
+  sidecar or none (readers fall back to a full scan), never a partial
+  one.
 - ``read_pruned`` plans from the sidecar: files whose [min, max]
   interval cannot intersect the predicate range are never handed to
   the reader. The residual predicate is ALWAYS applied to the
@@ -47,11 +48,12 @@ column.
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tastytrade_sdk_spark.streaming.sinks import dir_commit
 
 STATS_SUFFIX = ".stats"
 
@@ -113,26 +115,6 @@ def _file_stats(spark: SparkSession, files: list[str], stats_cols) -> DataFrame:
     return stats
 
 
-def _swap_sidecar(merged: DataFrame, final: str) -> None:
-    """Commit a sidecar with the sinks' recoverable fixed-name swap:
-    recovery first (a prior crash between the two renames left the
-    only copy under .__old), deterministic tmp/old names so orphans
-    from crashed runs are cleaned, then write + two renames."""
-    tmp, old = final + ".__tmp", final + ".__old"
-    if not os.path.exists(final) and os.path.exists(old):
-        os.rename(old, final)
-    for d in (tmp, old):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    # single stats file: the sidecar is one row per data file
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if os.path.exists(final):
-        os.rename(final, old)
-    os.rename(tmp, final)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
 def write_clustered(
     df: DataFrame,
     path: str,
@@ -150,7 +132,9 @@ def write_clustered(
     )
     spark = df.sparkSession
     stats = _file_stats(spark, _data_files(path), stats_cols)
-    _swap_sidecar(stats, _stats_path(path))
+    # single stats file: the sidecar is one row per data file
+    with dir_commit(_stats_path(path)) as tmp:
+        stats.coalesce(1).write.mode("overwrite").parquet(tmp)
 
 
 def pruned_file_plan(
@@ -238,9 +222,9 @@ def append_clustered(
     Stats are computed only over the files this append created (one
     scan of the new files, never the table — zero-row part files from
     an empty batch included, via _file_stats' synthetic rows), then
-    unioned with the existing sidecar under the recoverable fixed-name
-    swap (_swap_sidecar: a crash between its renames is restored on
-    the next call, so prior files' stats are never lost). Crash
+    unioned with the existing sidecar in one ``dir_commit`` (its entry
+    restores a sidecar a crashed swap left under ``.__old`` before the
+    union reads it, so prior files' stats are never lost). Crash
     between the data append and the sidecar extension is safe BY THE
     READER'S COMPLETENESS CHECK: a reader that sees data files the
     sidecar does not describe falls back to the full scan
@@ -259,14 +243,8 @@ def append_clustered(
         return
     new_stats = _file_stats(spark, new_files, stats_cols)
     final = _stats_path(path)
-    # recover a crashed previous swap BEFORE deciding whether a
-    # sidecar exists — otherwise this append would seed a fresh
-    # sidecar describing only its own files and orphan the old stats
-    old = final + ".__old"
-    if not os.path.exists(final) and os.path.exists(old):
-        os.rename(old, final)
-    if os.path.exists(final):
-        merged = spark.read.parquet(final).unionByName(new_stats)
-    else:
+    with dir_commit(final) as tmp:
         merged = new_stats
-    _swap_sidecar(merged, final)
+        if os.path.exists(final):
+            merged = spark.read.parquet(final).unionByName(new_stats)
+        merged.coalesce(1).write.mode("overwrite").parquet(tmp)

@@ -27,6 +27,26 @@ O(table) shuffle over many small tasks: at the latest-value table
 sizes a live feed keeps (keys = symbols or bars) the per-trigger
 fixed cost of jobs and tasks is what dominates; SCALING.md records the
 table size where the single task's merge time takes over.
+
+Directory commit (``dir_commit``): every sink, store, compaction and
+index rebuild that rewrites a directory commits the same way. The new
+contents are written to the sibling ``<path>.__tmp`` and swapped in by
+two renames, ``path -> <path>.__old`` then ``<path>.__tmp -> path``,
+after which ``.__old`` is deleted. A crash can leave three states, all
+repaired on the next commit's entry before anything is deleted: only
+``.__old`` (died between the renames: it is the only copy and is
+restored), a stale ``.__tmp`` (died while writing: removed), and
+``path`` beside ``.__old`` (died before the delete: ``.__old`` is
+dropped). Readers see the old directory or the new one, apart from the
+gap between the renames, when ``path`` is missing; read-only consumers
+resolve that gap through ``readable_store_path``, which serves
+``.__old``. A directory swap is not a transaction log, so the writer
+of ``path`` must be quiesced: the commit lists ``path``'s parquet
+files (recursively) on entry and again before the swap, and if they
+differ it aborts with ``path`` untouched instead of deleting a
+concurrent writer's file along with ``.__old``. Sidecars that must
+land with the data (``_epoch``, digests, layout stamps) are written
+into the same tmp directory, so they commit in the same rename.
 """
 
 from __future__ import annotations
@@ -35,7 +55,8 @@ import json
 import os
 import shutil
 import tempfile
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -107,36 +128,20 @@ def upsert_parquet_batch(
     per micro-batch is O(table + batch) in a single task, with no
     inference job and no shuffle.
 
-    Executor-side write to a sibling tmp dir, then directory swap —
-    never routes the table through the driver (a collect() here would
-    cap the keyed table at driver memory, a scale-killer at 100x) and
-    never reads+overwrites the same path in one job. A crash between
-    the two swap renames is recovered on the next call (the backup dir
-    is restored BEFORE it could be deleted), so replayed micro-batches
-    still converge (ST7). Concurrent readers can observe a brief
-    path-missing gap between the renames; use
-    streaming/manifest_store.versioned_upsert_batch when readers need
-    snapshot isolation. On a lake deployment this whole dance becomes
-    a Delta/Iceberg MERGE.
+    Executor-side write committed by ``dir_commit`` (module
+    docstring): the table never routes through the driver (a collect()
+    here would cap the keyed table at driver memory) and is never read
+    and overwritten by one job. A crashed swap is repaired on the next
+    call, so replayed micro-batches still converge (ST7). Readers that
+    need snapshot isolation across the swap use
+    streaming/manifest_store.versioned_upsert_batch; on a lake
+    deployment this becomes a Delta/Iceberg MERGE.
     """
-    tmp, old = path + ".__tmp", path + ".__old"
-    # crash recovery FIRST: a previous run that died between its two
-    # renames left the full table under `old` and no `path` — restore
-    # it before anything can delete the only copy
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    for d in (tmp, old):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    merged = _keep_last_merge(
-        batch_df, path if os.path.exists(path) else None, keys, order_by
-    )
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    with dir_commit(path) as tmp:
+        merged = _keep_last_merge(
+            batch_df, path if os.path.exists(path) else None, keys, order_by
+        )
+        merged.write.mode("overwrite").parquet(tmp)
 
 
 def latest_table_sink(
@@ -220,15 +225,13 @@ def committed_epoch(path: str) -> int:
 
 def _epoch_admits(path: str, epoch_id: int, who: str) -> bool:
     """Shared epoch guard for NON-idempotent (additive/decrementing)
-    foreachBatch merges. Recovers a crashed swap (``.__old`` left
-    behind), skips an already-committed replayed epoch, and raises on
-    epoch REGRESSION — a checkpoint deleted/recreated restarts epoch
-    ids at 0, and silently skipping would drop every new batch until
-    the counter catches up (quiet data loss). Clears stale tmp/old
-    dirs when admitting."""
-    tmp, old = path + ".__tmp", path + ".__old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
+    foreachBatch merges. Repairs a crashed swap first (``_repair``, so
+    the epoch is read from the restored store), skips an
+    already-committed replayed epoch, and raises on epoch REGRESSION —
+    a checkpoint deleted/recreated restarts epoch ids at 0, and
+    silently skipping would drop every new batch until the counter
+    catches up (quiet data loss)."""
+    _repair(path)
     committed = committed_epoch(path)
     if epoch_id <= committed:
         if epoch_id < committed:
@@ -239,27 +242,18 @@ def _epoch_admits(path: str, epoch_id: int, who: str) -> bool:
                 f"or remove the sink's _epoch sidecar to re-seed"
             )
         return False
-    for d in (tmp, old):
-        if os.path.exists(d):
-            shutil.rmtree(d)
     return True
 
 
 def _commit_swap(merged: DataFrame, path: str, epoch_id: int) -> None:
-    """Write the merged table + ``_epoch`` sidecar into a tmp dir and
-    atomically rename it over the store: data and epoch commit in the
-    SAME directory rename, so there is no crash window where one lands
-    without the other (underscore-prefixed sidecars are invisible to
-    the parquet reader)."""
-    tmp, old = path + ".__tmp", path + ".__old"
-    merged.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_epoch"), "w") as fh:
-        fh.write(str(epoch_id))
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    """Commit the merged table with its ``_epoch`` sidecar in one
+    ``dir_commit``: data and epoch land in the same rename, so no
+    crash leaves one without the other (underscore-prefixed sidecars
+    are invisible to the parquet reader)."""
+    with dir_commit(path) as tmp:
+        merged.write.mode("overwrite").parquet(tmp)
+        with open(os.path.join(tmp, "_epoch"), "w") as fh:
+            fh.write(str(epoch_id))
 
 
 def atomic_write(path: str, text: str) -> None:
@@ -278,6 +272,67 @@ def atomic_write(path: str, text: str) -> None:
     except BaseException:
         os.unlink(tmp)
         raise
+
+
+_TMP, _OLD = ".__tmp", ".__old"
+
+
+def parquet_files(path: str) -> list[str]:
+    """Sorted paths, relative to ``path``, of every ``.parquet`` file
+    under it (partition directories included); [] when ``path`` is
+    missing."""
+    return sorted(
+        os.path.relpath(os.path.join(base, f), path)
+        for base, _, names in os.walk(path)
+        for f in names
+        if f.endswith(".parquet")
+    )
+
+
+def _repair(path: str) -> None:
+    """Entry half of ``dir_commit``: restore ``.__old`` when ``path``
+    is missing (the only copy after a crash between the renames), then
+    remove ``.__tmp`` / ``.__old`` debris."""
+    tmp, old = path + _TMP, path + _OLD
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+    for d in (tmp, old):
+        if os.path.exists(d):
+            shutil.rmtree(d)
+
+
+@contextmanager
+def dir_commit(path: str) -> Iterator[str]:
+    """The ONE directory commit (module docstring): ``with
+    dir_commit(path) as tmp:`` repairs a crashed earlier commit,
+    yields the fresh ``tmp`` for the body to write the new contents
+    into, and on normal exit swaps ``tmp`` in for ``path``. A body
+    that writes nothing to ``tmp`` commits nothing. A body that raises
+    leaves ``path`` untouched and no ``tmp``. If ``path``'s parquet
+    files changed while the body ran, the commit aborts with
+    ``RuntimeError`` and ``path`` untouched."""
+    tmp, old = path + _TMP, path + _OLD
+    _repair(path)
+    before = parquet_files(path)
+    try:
+        yield tmp
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if not os.path.exists(tmp):
+        return
+    if parquet_files(path) != before:
+        shutil.rmtree(tmp)
+        raise RuntimeError(
+            f"{path} changed during compaction or rewrite (concurrent "
+            "writer?) — aborted, left untouched; quiesce the writer "
+            "and retry"
+        )
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
 def additive_agg_batch(
@@ -354,83 +409,55 @@ def compact_parquet_table(
     every scan. Compaction rewrites the table into
     ceil(bytes / target_file_bytes) files via coalesce (a NARROW
     repartition: no shuffle, existing files are concatenated
-    per-output-task) and commits with the same tmp-then-rename dance
-    as the upsert sinks, INCLUDING their restore-before-delete crash
-    recovery: a run that died between its two renames left the only
-    copy under ``.__old``, which the next call restores before
-    anything can delete it.
+    per-output-task) and commits through ``dir_commit`` (module
+    docstring), with the ``_epoch`` sidecar carried into the rewrite.
 
-    The WRITER MUST BE QUIESCED for the read-rewrite-swap window —
-    this is a directory swap, not a transaction log; a concurrent
-    append's file would ride into ``.__old`` and be deleted with it.
-    Without Delta/Iceberg optimistic commits in this container the
-    hazard is detected, not prevented: the file listing is re-checked
-    immediately before the swap and the compaction ABORTS (table
-    untouched) if it changed.
+    The WRITER MUST BE QUIESCED: a file appended during the rewrite
+    aborts the compaction, table untouched. A PARTITIONED root (``k=v``
+    directories) is refused, because the rewrite would flatten its
+    partition columns into the files; compact each partition directory
+    instead.
 
     If a data-skipping stats sidecar (sources/skipping) exists it is
     REMOVED rather than silently left stale: the old per-file stats
     describe files that no longer exist, and a missing sidecar means
     fallback-to-full-scan (correct), where a stale one could mis-prune.
     The removal happens BEFORE the new table swaps in, so no reader
-    can pair fresh data files with stale per-file stats (and a crash
-    anywhere after leaves only the safe missing-sidecar state).
-    Callers re-cluster + re-stat via skipping.write_clustered when the
-    table is meant to stay skippable.
+    can pair fresh data files with stale per-file stats; a crash or an
+    aborted commit after it leaves the table without a sidecar, the
+    same safe full-scan state. Callers re-cluster + re-stat via
+    skipping.write_clustered when the table is meant to stay
+    skippable.
 
     Returns {"files_before", "files_after", "bytes"} for observability.
     """
     from tastytrade_sdk_spark.sources.skipping import STATS_SUFFIX
 
-    tmp, old = path + ".__tmp", path + ".__old"
-    # crash recovery FIRST (same as upsert_parquet_batch): a previous
-    # run that died between its renames left the full table under
-    # `old` and no `path` — restore it before the cleanup below could
-    # delete the only copy
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    for d in (tmp, old):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    def _listing() -> list[str]:
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
+    with dir_commit(path) as tmp:
+        parts = sorted(
+            d for d in os.listdir(path)
+            if "=" in d and os.path.isdir(os.path.join(path, d))
         )
-
-    files = _listing()
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(path)
-    df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    # carry the epoch sidecar through the rewrite (additive/upsert
-    # stores guard replays with it; losing it would re-admit an old
-    # epoch after compaction)
-    epoch = os.path.join(path, "_epoch")
-    if os.path.exists(epoch):
-        with open(epoch) as fh:
-            val = fh.read()
-        with open(os.path.join(tmp, "_epoch"), "w") as fh:
-            fh.write(val)
-    if _listing() != files:
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"compact_parquet_table: {path} changed during compaction "
-            "(concurrent writer?) — aborted, table untouched; quiesce "
-            "the writer and retry"
-        )
-    # stale stats go BEFORE the swap: missing sidecar = full-scan
-    # fallback for any reader racing the window; removing it after
-    # would let a pruned read resolve old file URIs that the swap
-    # just deleted
-    sidecar = path.rstrip("/") + STATS_SUFFIX
-    if os.path.exists(sidecar):
-        shutil.rmtree(sidecar)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+        if parts:
+            raise ValueError(
+                f"compact_parquet_table: {path} is partitioned "
+                f"({parts[0]}, ...); compact each partition directory "
+                "instead"
+            )
+        files = parquet_files(path)
+        total = sum(os.path.getsize(os.path.join(path, f)) for f in files)
+        n_out = max(1, -(-total // target_file_bytes))
+        spark.read.parquet(path).coalesce(n_out).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        # the epoch sidecar guards replays of additive/upsert stores;
+        # losing it would re-admit an old epoch after compaction
+        epoch = os.path.join(path, "_epoch")
+        if os.path.exists(epoch):
+            shutil.copyfile(epoch, os.path.join(tmp, "_epoch"))
+        sidecar = path.rstrip("/") + STATS_SUFFIX
+        if os.path.exists(sidecar):
+            shutil.rmtree(sidecar)
     return {
         "files_before": len(files),
         "files_after": n_out,
@@ -440,16 +467,16 @@ def compact_parquet_table(
 
 def readable_store_path(path: str) -> "str | None":
     """Directory a READ-ONLY consumer should scan: the store itself,
-    or the pre-swap ``.__old`` snapshot if a writer crashed between
-    _commit_swap's two renames (store absent, old present) — without
+    or the pre-swap ``.__old`` snapshot in the gap between
+    ``dir_commit``'s two renames (store absent, old present) — without
     it a reader in that window would mistake a populated store for a
     never-created one and report empty results. Readers never mutate
-    (the next write's _epoch_admits performs the actual restore), so a
-    reader racing that recovery sees one complete snapshot either way.
-    Returns None when neither exists (genuinely never created)."""
+    (the next commit performs the actual restore), so a reader racing
+    that recovery sees one complete snapshot either way. Returns None
+    when neither exists (genuinely never created)."""
     if os.path.exists(path):
         return path
-    old = path + ".__old"
+    old = path + _OLD
     if os.path.exists(old):
         return old
     return None

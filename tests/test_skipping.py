@@ -219,18 +219,16 @@ class TestCompaction:
 
         path = str(tmp_path / "racy")
         spark.range(300).withColumnRenamed("id", "v").write.parquet(path)
-        real_listdir = _os.listdir
-        calls = {"n": 0}
+        real_listing = sinks.parquet_files
 
-        def racy_listdir(p):
-            out = real_listdir(p)
-            if str(p) == path:
-                calls["n"] += 1
-                if calls["n"] > 1:
-                    out = list(out) + ["part-99999-phantom.snappy.parquet"]
+        def racy_listing(p):
+            # the phantom "lands" once the rewrite has been written
+            out = real_listing(p)
+            if str(p) == path and _os.path.exists(path + ".__tmp"):
+                out = out + ["part-99999-phantom.snappy.parquet"]
             return out
 
-        monkeypatch.setattr(sinks.os, "listdir", racy_listdir)
+        monkeypatch.setattr(sinks, "parquet_files", racy_listing)
         with _pytest.raises(RuntimeError, match="changed during compaction"):
             sinks.compact_parquet_table(spark, path)
         monkeypatch.undo()
