@@ -88,10 +88,17 @@ def doc_lengths(
 def _query_terms(
     query_docs: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
-    return query_docs.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(tokens_expr(F.col(text_col))).alias("term"),
-    ).distinct()
+    # explode a token COLUMN: Spark infers size(__toks) > 0 for it, the
+    # selective filter dynamic partition pruning requires of the side
+    # that prunes an index scan (an inline expression gets none)
+    return (
+        query_docs.select(
+            F.col(id_col).alias("query_id"),
+            tokens_expr(F.col(text_col)).alias("__toks"),
+        )
+        .select("query_id", F.explode("__toks").alias("term"))
+        .distinct()
+    )
 
 
 def _bm25_score_tail(
@@ -364,8 +371,8 @@ def bm25_index_write(
     """Persist the inverted index as a term-bucket-PARTITIONED parquet
     table — the lexical twin of similarity.ivf_index_write: one
     directory per term bucket, so a search reads only the buckets its
-    query terms hash into (directory-level elimination at planning
-    time). Layout:
+    query terms hash into (directory-level elimination when the search
+    executes). Layout:
 
     - ``<path>/postings/bucket=<b>/`` — (term, doc_id, tf), bucket =
       xxhash64(term) mod n_buckets (engine-internal routing only —
@@ -494,30 +501,6 @@ def bm25_index_append(
     return stats
 
 
-def _probe_postings(
-    spark, path: str, qterms: DataFrame, n_buckets: int, id_col: str
-) -> DataFrame:
-    """The probed-buckets-only postings read: query terms' bucket ids
-    are computed first (one tiny bounded job), ONLY those bucket
-    directories are scanned (directory-level elimination — the
-    PartitionFilters the pruning tests assert on this frame's plan),
-    and the slice is narrowed to the query's exact terms."""
-    import os
-
-    buckets = sorted(
-        r["b"]
-        for r in qterms.select(_bucket_col(n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
-    return (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .filter(F.col("bucket").isin(buckets))
-        .select("term", id_col, "tf")
-        .join(F.broadcast(qterms.select("term").distinct()), "term")
-    )
-
-
 def bm25_index_topk(
     spark,
     path: str,
@@ -528,19 +511,25 @@ def bm25_index_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Search the persisted index: the query terms' bucket ids are
-    computed first (one tiny bounded job — same pattern as
-    ivf_index_topk's probed lists) and ONLY those bucket directories
-    are read; scoring is the exact shared tail, so results are
+    """Search the persisted index (batch or streamed layout) as one
+    lazy plan, built without a Spark job. Every table is read with
+    the schema in its own parquet footer (no inference job), and
+    postings/ is joined on (term, ``bucket``) against the broadcast
+    query terms and their bucket ids, so dynamic partition pruning
+    reads only the query terms' bucket directories, decided when the
+    plan executes. Scoring is the exact shared tail, so results are
     identical to the in-memory bm25_topk (equivalence-tested, and the
     [Q] shares bm25_more_like_this's oracle). avgdl/n_docs come from
-    the exact integer stats sidecar — bit-identical to the in-memory
+    the exact integer stats — bit-identical to the in-memory
     aggregate because both divide the same exact integers as doubles.
     """
     import json
     import os
 
-    from tastytrade_sdk_spark.streaming.sinks import readable_store_path
+    from tastytrade_sdk_spark.streaming.sinks import (
+        _footer_schema,
+        readable_store_path,
+    )
 
     # a compactor mid-swap leaves the index under .__old for a moment;
     # read-only consumers fall back to that snapshot instead of
@@ -550,6 +539,11 @@ def bm25_index_topk(
     if resolved is None:
         raise FileNotFoundError(f"no BM25 index at {path}")
     path = resolved
+
+    def table(name: str) -> DataFrame:
+        d = os.path.join(path, name)
+        return spark.read.schema(_footer_schema(d)).parquet(d)
+
     stats_file = os.path.join(path, _BM25_STATS)
     empty = False
     if os.path.exists(stats_file):
@@ -572,14 +566,12 @@ def bm25_index_topk(
         )
     else:
         # streamed layout (bm25_index_sink): one exact stats row per
-        # epoch partition. The sum stays IN-PLAN (a 1-row no-key
-        # aggregate crossJoined into the tail like the in-memory
-        # path's dl agg) instead of collecting to literals — one
-        # fewer driver job per search; same exact integer sums, same
-        # JVM HALF_UP rounding, so bit-identical avgdl.
-        n_buckets = json.load(
-            open(os.path.join(path, "_layout.json"))
-        )["n_buckets"]
+        # epoch partition, summed IN-PLAN (a 1-row no-key aggregate
+        # crossJoined into the tail like the in-memory path's dl agg);
+        # same exact integer sums, same JVM HALF_UP rounding, so
+        # bit-identical avgdl.
+        with open(os.path.join(path, "_layout.json")) as fh:
+            n_buckets = json.load(fh)["n_buckets"]
         # all-empty streamed index: stats rows land even for empty
         # epochs but postings/doclen have no data files — reading
         # them would fail. Detect via the filesystem (no Spark job).
@@ -588,14 +580,15 @@ def bm25_index_topk(
             for _, _, fs in os.walk(os.path.join(path, "postings"))
             for f in fs
         )
-        glob = spark.read.parquet(os.path.join(path, "stats")).agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.round(
-                F.coalesce(F.sum("sum_dl"), F.lit(0)).cast("double")
-                / F.sum("n_docs").cast("double"),
-                6,
-            ).alias("avgdl"),
-        )
+        if not empty:
+            glob = table("stats").agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.round(
+                    F.coalesce(F.sum("sum_dl"), F.lit(0)).cast("double")
+                    / F.sum("n_docs").cast("double"),
+                    6,
+                ).alias("avgdl"),
+            )
     if empty:
         from pyspark.sql import types as T
 
@@ -611,25 +604,16 @@ def bm25_index_topk(
                 ]
             ),
         )
-    # used three times (bucket collect, probe broadcast, score tail);
-    # LAZY checkpoint — the bucket collect inside _probe_postings is
-    # the first consumer and materializes it as part of its own job,
-    # so the eager variant's extra driver job is pure overhead
-    qterms = _query_terms(query_docs, text_col, id_col).localCheckpoint(
-        eager=False
+    qterms = _query_terms(query_docs, text_col, id_col)
+    probe = qterms.select(
+        "term", _bucket_col(n_buckets).alias("bucket")
+    ).distinct()
+    probed = (
+        table("postings")
+        .join(F.broadcast(probe), ["term", "bucket"])
+        .select("term", id_col, "tf")
     )
-    # the fetched posting slice feeds both the df aggregate and the
-    # candidate join in the tail — checkpoint it so the index is read
-    # once per search, not once per tail consumer. The bucket-pruned
-    # scan itself is built by _probe_postings (the pruning witness the
-    # tests assert PartitionFilters on, since this checkpoint hides
-    # the scan from the result's plan).
-    probed = _probe_postings(
-        spark, path, qterms, n_buckets, id_col
-    ).localCheckpoint(eager=False)
-    dl = spark.read.parquet(os.path.join(path, "doclen")).select(
-        id_col, "dl"
-    )
+    dl = table("doclen").select(id_col, "dl")
     return _bm25_score_tail(probed, qterms, dl, glob, k, k1, b, id_col)
 
 

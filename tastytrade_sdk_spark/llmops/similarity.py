@@ -1346,10 +1346,10 @@ def ivf_index_write(
     table: one directory per inverted list. This is the index-as-table
     lifecycle the in-memory ivf_topk alludes to — build once, then
     every query session reads ONLY its probed lists via Spark's
-    partition pruning (directory-level elimination at planning time,
-    visible as PartitionFilters in the scan). At lake scale the index
-    is maintained like any other table: append new vectors to their
-    list directories, compact per partition.
+    dynamic partition pruning (directory-level elimination when the
+    search executes, visible as PartitionFilters in the scan). At lake
+    scale the index is maintained like any other table: append new
+    vectors to their list directories, compact per partition.
 
     A rebuild commits through sinks.dir_commit, so a failed rebuild
     leaves the previous index (data and digest) searchable."""
@@ -1440,37 +1440,44 @@ def ivf_index_topk(
     round_dp: int = 6,
 ) -> DataFrame:
     """nprobe search over a persisted IVF index (ivf_index_write):
-    probe lists are computed per query, their UNION is collected to
-    the driver (bounded by n_lists integers — the partition universe,
-    never data), and the index scan is filtered on the partition
-    column so only those directories are read. Scoring/top-k is the
-    same exact path as ivf_topk, so results are identical to the
-    in-memory form (equivalence-tested).
+    one lazy plan, built without a Spark job. The index is read with
+    the schema in its own parquet footer (no inference job) and joined
+    on its partition column ``list_id`` against the broadcast probe
+    lists of the queries, so dynamic partition pruning reads only the
+    probed list directories, decided when the plan executes. Scoring
+    and top-k are the same exact path as ivf_topk, so results are
+    identical to the in-memory form (equivalence-tested).
 
     Swap-window safe: a compactor (sinks.compact_parquet_table on a
     list partition, or any tmp-then-rename rewrite of the root)
     mid-swap leaves the index under ``.__old`` for a moment; reads
     fall back to that snapshot instead of crashing — same contract as
     bm25_index_topk (readable_store_path precedent)."""
-    from tastytrade_sdk_spark.streaming.sinks import readable_store_path
+    from tastytrade_sdk_spark.streaming.sinks import (
+        _footer_schema,
+        readable_store_path,
+    )
 
     resolved = readable_store_path(path)
     if resolved is None:
         raise FileNotFoundError(f"no IVF index at {path}")
     path = resolved
     _check_centroid_sidecar(path, centroids, "ivf_index_topk")
-    probe_udf = _ivf_probe_col(centroids, nprobe)
-    qb = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-    ).withColumn("__list", F.explode(probe_udf(F.col("__qvec"))))
-    qb = qb.localCheckpoint(eager=True)  # probe lists used twice below
-    probed = sorted(
-        r["__list"] for r in qb.select("__list").distinct().collect()
+    # explode a probe-list COLUMN: Spark infers size(__probe) > 0 for
+    # it, the selective filter dynamic partition pruning requires of
+    # the broadcast side (an inline expression gets no such filter)
+    qb = (
+        queries.select(
+            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
+        )
+        .withColumn(
+            "__probe", _ivf_probe_col(centroids, nprobe)(F.col("__qvec"))
+        )
+        .select("__qid", "__qvec", F.explode("__probe").alias("list_id"))
     )
-    index = spark.read.parquet(path).filter(F.col("list_id").isin(probed))
+    index = spark.read.schema(_footer_schema(path)).parquet(path)
     cands = (
-        index.withColumnRenamed("list_id", "__list")
-        .join(F.broadcast(qb), "__list")
+        index.join(F.broadcast(qb), "list_id")
         .filter(F.col(id_col) != F.col("__qid"))
         .select("__qid", id_col, vec_col, "__qvec")
     )
@@ -2079,9 +2086,7 @@ def knn_graph_index_write(
     root, each readable with directory-level pruning:
 
     - ``edges/``   — the NN-descent graph, partitioned by an id-hash
-      bucket of the SOURCE node: a search hop touches only the
-      frontier's buckets (PartitionFilters, the bm25 probed-bucket
-      recipe), never the full edge table.
+      bucket of the SOURCE node.
     - ``units/``   — precomputed unit vectors, partitioned by the same
       id-hash bucket: exact rescoring reads only candidate buckets.
     - ``entry/``   — (list_id, node) entry points: the min corpus id
@@ -2183,22 +2188,34 @@ def knn_graph_index_search(
     round_dp: int = 6,
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Search a persisted k-NN graph index: seed each query at its
-    nearest list's entry node (broadcast join against the tiny entry
-    table), expand ``hops`` rounds over the PRUNED edge partitions —
-    per hop, the frontier's distinct bucket ids (≤ n_buckets integers,
-    collected from a frame bounded by |queries|·d^hop rows, never the
-    corpus) become a partition filter on edges/ — then exact-rescore
-    candidates against the candidate-bucket-pruned units/ table.
-    Results are identical to graph_expand_topk over the same graph
-    (equivalence-tested); the plan carries PartitionFilters on every
-    index read (plan-asserted)."""
+    """Search a persisted k-NN graph index as one lazy plan, built
+    without a Spark job. Each query seeds at its nearest list's entry
+    node (broadcast join against the tiny entry table), the walk
+    grows the cumulative node set ``hops`` times, C₀ = entry,
+    C_{h+1} = distinct(C_h ∪ N(C_h)) — one linear chain of left joins
+    against edges/, which equals graph_expand_topk's union of per-hop
+    layers because N(∪L_i) = ∪N(L_i) — and the candidates are
+    exact-rescored against units/. Every table is read with the
+    schema in its own parquet footer (no inference job). The rescore
+    joins units/ on its partition column ``bucket`` against the
+    broadcast candidate buckets, so dynamic partition pruning reads
+    only those directories, decided when the plan executes. The hops
+    read edges/ whole: that pruning runs only from the broadcast side
+    of a join, and a left join cannot broadcast the side it keeps
+    (edges/ is the small table here: |corpus|·k id pairs). The walk
+    is repartitioned by query once, so each hop's dedup runs where
+    its rows already are (no shuffle per hop while edges/ is
+    broadcast). Results are identical to graph_expand_topk over the
+    same graph (equivalence-tested)."""
     import json as _json
     import os
 
     from pyspark.sql import Window
 
-    from tastytrade_sdk_spark.streaming.sinks import readable_store_path
+    from tastytrade_sdk_spark.streaming.sinks import (
+        _footer_schema,
+        readable_store_path,
+    )
 
     resolved = readable_store_path(path)
     if resolved is None:
@@ -2207,66 +2224,60 @@ def knn_graph_index_search(
     _check_centroid_sidecar(path, centroids, "knn_graph_index_search")
     with open(os.path.join(path, "_graph_meta.json")) as fh:
         n_buckets = _json.load(fh)["n_buckets"]
-    entry = spark.read.parquet(os.path.join(path, "entry"))
-    qb = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-    ).withColumn(
-        "list_id", F.explode(_ivf_probe_col(centroids, 1)(F.col("__qvec")))
+
+    def table(name: str) -> DataFrame:
+        d = os.path.join(path, name)
+        return spark.read.schema(_footer_schema(d)).parquet(d)
+
+    # explode a probe-list COLUMN: Spark infers size(__probe) > 0 for
+    # it, the selective filter dynamic partition pruning requires of
+    # the broadcast side (an inline expression gets no such filter)
+    qb = (
+        queries.select(
+            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
+        )
+        .withColumn(
+            "__probe", _ivf_probe_col(centroids, 1)(F.col("__qvec"))
+        )
+        .select("__qid", F.explode("__probe").alias("list_id"))
     )
-    frontier = qb.join(F.broadcast(entry), "list_id").select("__qid", "node")
-    # LAZY checkpoints throughout the walk: each hop's first consumer
-    # is its own bucket-collect job, which materializes the blocks —
-    # the eager variant paid one extra driver-scheduled job per hop
-    frontier = frontier.localCheckpoint(eager=False)
-    layers = [frontier]
-    # open the edges table ONCE (file listing + schema inference);
-    # each hop applies its own partition filter to the same relation
-    edges_all = spark.read.parquet(os.path.join(path, "edges"))
+    walk = (
+        qb.join(F.broadcast(table("entry")), "list_id")
+        .select("__qid", "node")
+        .repartition("__qid")
+    )
+    edges = table("edges").select(F.col("src").alias("node"), "dst")
     for _ in range(hops):
-        buckets = sorted(
-            r["b"]
-            for r in frontier.select(
-                F.pmod(F.xxhash64(F.col("node")), F.lit(n_buckets)).alias("b")
+        # a node without out-edges keeps itself (coalesce), so the
+        # left join carries all of C_h along with its neighbours
+        walk = (
+            walk.join(edges, "node", "left")
+            .select(
+                "__qid",
+                F.explode(
+                    F.array("node", F.coalesce("dst", "node"))
+                ).alias("node"),
             )
             .distinct()
-            .collect()
         )
-        edges_h = edges_all.filter(F.col("bucket").isin(buckets))
-        frontier = (
-            frontier.join(edges_h, frontier["node"] == edges_h["src"])
-            .select("__qid", F.col("dst").alias("node"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        layers.append(frontier)
-    cand = layers[0]
-    for l in layers[1:]:
-        cand = cand.unionByName(l)
     if exclude_self:
         # shared-id-space convention (queries ARE corpus members);
         # disjoint-id-domain callers pass exclude_self=False or a
         # valid candidate colliding with a query id is lost (the
         # mmr_rerank advisor finding, applied here too)
-        cand = cand.filter(F.col("node") != F.col("__qid"))
-    cand = cand.distinct().select("__qid", F.col("node").alias(id_col))
-    cbuckets = sorted(
-        r["b"]
-        for r in cand.select(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    units = (
-        spark.read.parquet(os.path.join(path, "units"))
-        .filter(F.col("bucket").isin(cbuckets))
-        .select(id_col, "__unit")
+        walk = walk.filter(F.col("node") != F.col("__qid"))
+    cand = walk.distinct().select(
+        "__qid",
+        F.col("node").alias(id_col),
+        # the units/ partition value, int as its footer schema types it
+        F.pmod(F.xxhash64("node"), F.lit(n_buckets)).cast("int").alias("bucket"),
     )
     uq = with_unit_vector(
         queries.select(F.col(query_id_col).alias("__qid"), vec_col), vec_col
     ).select("__qid", F.col("__unit").alias("__qunit"))
     scored = (
-        cand.join(units, id_col)
+        table("units")
+        .join(F.broadcast(cand), [id_col, "bucket"])
         .join(F.broadcast(uq), "__qid")
         .select(
             "__qid",

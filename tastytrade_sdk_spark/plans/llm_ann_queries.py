@@ -436,10 +436,10 @@ def graph_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_graph_index_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-ANN with a PERSISTED k-NN graph index (r7, judge item 6):
     knn_graph_index_write lands the NN-descent edges / unit vectors /
-    entry points as bucket-partitioned tables, and the search expands
-    hops over PRUNED edge partitions (PartitionFilters per hop — the
-    bm25 probed-bucket recipe) instead of rebuilding the graph per
-    query session. Same construction parameters and scoring tail as
+    entry points as bucket-partitioned tables, and the search walks
+    the stored edges and rescores only the candidates' unit-vector
+    partitions (dynamic partition pruning) instead of rebuilding the
+    graph per query session. Same construction parameters and scoring tail as
     graph_ann_search, so the same end-to-end SQL oracle replays it;
     what this [Q] adds is the index LIFECYCLE (pruning asserted in
     tests/test_llmops.py::TestKnnGraphIndex)."""
@@ -712,8 +712,8 @@ def ann_recall_curve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN over a PERSISTED IVF index: the inverted lists land as a
     list_id-partitioned parquet table and the nprobe search reads only
-    the probed partitions — directory-level elimination at planning
-    time (similarity.ivf_index_write / ivf_index_topk). Same fixed
+    the probed partitions — directory-level elimination when the plan
+    executes (similarity.ivf_index_write / ivf_index_topk). Same fixed
     one-hot quantizer and scoring path as ann_ivf_cosine, so the same
     exact SQL oracle replays it; what this [Q] adds is the index
     LIFECYCLE — build once as a table, query forever with partition

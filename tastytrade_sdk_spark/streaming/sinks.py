@@ -32,8 +32,11 @@ Directory commit (``dir_commit``): every sink, store, compaction and
 index rebuild that rewrites a directory commits the same way. The new
 contents are written to the sibling ``<path>.__tmp`` and swapped in by
 two renames, ``path -> <path>.__old`` then ``<path>.__tmp -> path``,
-after which ``.__old`` is deleted. A crash can leave three states, all
-repaired on the next commit's entry before anything is deleted: only
+after which ``.__old`` is deleted. The siblings of a partition
+directory (``root/k=v``) are hidden ones, ``root/.k=v.__tmp`` and
+``root/.k=v.__old``, so that reads of the partitioned root never list
+them. A crash can leave three states, all repaired on the next
+commit's entry before anything is deleted: only
 ``.__old`` (died between the renames: it is the only copy and is
 restored), a stale ``.__tmp`` (died while writing: removed), and
 ``path`` beside ``.__old`` (died before the delete: ``.__old`` is
@@ -61,7 +64,7 @@ from contextlib import contextmanager
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructType
 
 from tastytrade_sdk_spark.operators.dedup import keep_last
 
@@ -75,15 +78,33 @@ def _footer_schema(table_dir: str) -> StructType:
     """The Spark schema of a Spark-written parquet table, read on the
     driver from the footer of one of its data files (well under 1 ms)
     instead of by an inference job. Every file of the table was
-    written with the same schema, so any one of them serves."""
-    files = sorted(
-        f for f in os.listdir(table_dir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    if not files:
+    written with the same schema, so any one of them serves.
+
+    A partitioned root keeps its data files under ``k=v`` directories
+    (nested, one level per partition column): the schema is then the
+    first such file's, followed by each partition column in nesting
+    order, typed int as partition discovery types these ids (list,
+    bucket and epoch numbers; a value past int32 fails the read
+    loudly). Hidden (``_``, ``.``) names are skipped, as Spark's
+    listing skips them."""
+    for base, dirs, files in os.walk(table_dir):
+        dirs[:] = sorted(
+            d for d in dirs if "=" in d and not d.startswith(("_", "."))
+        )
+        data = sorted(
+            f for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        if data:
+            break
+    else:
         raise FileNotFoundError(f"{table_dir}: no parquet data file")
-    meta = pq.read_schema(os.path.join(table_dir, files[0])).metadata
-    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    meta = pq.read_schema(os.path.join(base, data[0])).metadata
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    rel = os.path.relpath(base, table_dir)
+    for part in [] if rel == "." else rel.split(os.sep):
+        schema.add(part.split("=", 1)[0], IntegerType())
+    return schema
 
 
 def _keep_last_merge(
@@ -289,11 +310,24 @@ def parquet_files(path: str) -> list[str]:
     )
 
 
+def _siblings(path: str) -> tuple[str, str]:
+    """``(tmp, old)`` of a commit of ``path``: ``<path>.__tmp`` and
+    ``<path>.__old``, hidden behind a leading ``.`` when ``path`` is a
+    partition directory (``k=v``). Partition discovery would list a
+    visible ``k=v.__old`` beside its partitions as one more partition
+    value (rows read twice, the column widened to string); it skips
+    ``.`` names, while ``_`` names that hold ``=`` are still listed."""
+    head, name = os.path.split(path.rstrip("/"))
+    if "=" in name:
+        path = os.path.join(head, "." + name)
+    return path + _TMP, path + _OLD
+
+
 def _repair(path: str) -> None:
     """Entry half of ``dir_commit``: restore ``.__old`` when ``path``
     is missing (the only copy after a crash between the renames), then
     remove ``.__tmp`` / ``.__old`` debris."""
-    tmp, old = path + _TMP, path + _OLD
+    tmp, old = _siblings(path)
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
     for d in (tmp, old):
@@ -311,7 +345,7 @@ def dir_commit(path: str) -> Iterator[str]:
     leaves ``path`` untouched and no ``tmp``. If ``path``'s parquet
     files changed while the body ran, the commit aborts with
     ``RuntimeError`` and ``path`` untouched."""
-    tmp, old = path + _TMP, path + _OLD
+    tmp, old = _siblings(path)
     _repair(path)
     before = parquet_files(path)
     try:
@@ -476,7 +510,7 @@ def readable_store_path(path: str) -> "str | None":
     when neither exists (genuinely never created)."""
     if os.path.exists(path):
         return path
-    old = path + _OLD
+    old = _siblings(path)[1]
     if os.path.exists(old):
         return old
     return None

@@ -288,6 +288,71 @@ def test_compact_refuses_partitioned_root(spark, tmp_path):
     assert sorted(os.listdir(tmp_path)) == ["parted"]
 
 
+def test_partition_commit_siblings_stay_out_of_the_root(
+    spark, tmp_path, monkeypatch
+):
+    """Compacting one partition directory (``root/list_id=0``, as the
+    IVF index's per-list maintenance does) puts the commit's siblings
+    inside the partitioned root. Partition discovery must never list
+    them: a stale ``list_id=0.__old`` left by a crash before its
+    delete read back as 40 rows with ``list_id`` widened to string,
+    and an explicit int schema failed with INVALID_PARTITION_VALUE. A
+    crash between the two renames still heals on the next commit."""
+    import shutil
+
+    root = str(tmp_path / "ivf")
+    (
+        spark.range(30)
+        .withColumn("list_id", (F.col("id") % 3).cast("int"))
+        .write.partitionBy("list_id")
+        .parquet(root)
+    )
+    part = os.path.join(root, "list_id=0")
+    tmp, old = sinks._siblings(part)
+
+    def reads(n):
+        inferred = spark.read.parquet(root)
+        footer = spark.read.schema(sinks._footer_schema(root)).parquet(root)
+        for df in (inferred, footer):
+            assert dict(df.dtypes)["list_id"] == "int"
+            assert df.count() == n
+
+    # crash after the second rename, before the delete: a stale old
+    # copy beside the committed partition
+    real_rmtree = shutil.rmtree
+
+    def crash_before_delete(p, *a, **kw):
+        if p == old:
+            raise OSError("crash")
+        return real_rmtree(p, *a, **kw)
+
+    monkeypatch.setattr(shutil, "rmtree", crash_before_delete)
+    with pytest.raises(OSError, match="crash"):
+        sinks.compact_parquet_table(spark, part)
+    monkeypatch.undo()
+    assert os.path.isdir(old)
+    reads(30)
+
+    # crash between the renames: the partition exists only as the old
+    # copy (a reader of the root misses it until the next commit)
+    real_rename = os.rename
+
+    def crash_between_renames(src, dst):
+        if src == tmp:
+            raise OSError("crash")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_between_renames)
+    with pytest.raises(OSError, match="crash"):
+        sinks.compact_parquet_table(spark, part)
+    monkeypatch.undo()
+    assert not os.path.exists(part) and os.path.isdir(old)
+    reads(20)
+    sinks.compact_parquet_table(spark, part)
+    assert not os.path.exists(old) and not os.path.exists(tmp)
+    reads(30)
+
+
 def test_compact_abort_leaves_table_without_stale_sidecar(
     spark, tmp_path, monkeypatch
 ):

@@ -200,26 +200,18 @@ class TestPersistedIndex:
         """The postings scan must carry a PARTITION filter on bucket
         (directory-level elimination — inputFiles() reports the
         unpruned relation listing, so the executed plan is the right
-        witness; same idiom as the IVF index pruning test). The scan
-        is asserted on _probe_postings — the exact frame
-        bm25_index_topk checkpoints (r11: the checkpoint barrier that
-        stops the tail's two consumers re-reading the index also hides
-        the scan node from the result's own plan)."""
+        witness; same idiom as the IVF index pruning test). The search
+        is one lazy plan, so the scan sits in the result's own plan;
+        tests/test_lazy_index_search.py checks what it read."""
         import re
 
-        from tastytrade_sdk_spark.llmops.retrieval import (
-            _probe_postings,
-            _query_terms,
-        )
+        from tastytrade_sdk_spark.llmops.retrieval import bm25_index_topk
 
-        corpus, path, stats = indexed
+        corpus, path, _ = indexed
         q = corpus.filter(F.col("doc_id") == 3)  # "the lazy dog sleeps"
-        qterms = _query_terms(q, "text", "doc_id")
-        probed = _probe_postings(
-            spark, path, qterms, stats["n_buckets"], "doc_id"
-        )
-        probed.collect()
-        plan = probed._jdf.queryExecution().executedPlan().toString()
+        got = bm25_index_topk(spark, path, q, k=4)
+        got.collect()
+        plan = got._jdf.queryExecution().executedPlan().toString()
         m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
         assert m and "bucket" in m.group(1), plan[:2000]
 
