@@ -23,6 +23,12 @@ same code deploys unchanged to a multi-executor cluster:
   2000 it recompiles 0, 7 and 13 (seed 1, 4-core host). It is a
   static conf, so it is set here, before the session exists;
   ``codegen_compiles`` reads the churn.
+- Whole-stage classes are named without their codegen stage id. With
+  AQE, ids follow the order in which query stages are planned, and
+  that order changes with which concurrent shuffle stage finishes
+  first. The id is part of the class name and so of the cache key: a
+  repeated BM25 index search recompiled 4 identical classes in about
+  half its runs because two of its stages swapped ids.
 - Python workers fork from ``worker_daemon`` (the
   ``spark.python.daemon.module``), so every applyInPandas /
   mapInPandas / pandas_udf / applyInPandasWithState task runs with it.
@@ -87,6 +93,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.python.daemon.module", "tastytrade_sdk_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
