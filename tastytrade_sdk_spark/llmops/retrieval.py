@@ -512,9 +512,13 @@ def bm25_index_topk(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Search the persisted index (batch or streamed layout) as one
-    lazy plan, built without a Spark job. Every table is read with
-    the schema in its own parquet footer (no inference job), and
-    postings/ is joined on (term, ``bucket``) against the broadcast
+    lazy plan. Building it starts no Spark job while no directory of
+    postings/ holds more than 32 partition directories (epochs or
+    buckets); above that (the default ``n_buckets=64`` included)
+    Spark's parallel partition discovery lists the table with a job
+    at build time. Every table is read with the schema in its own
+    parquet footer (no inference job), and postings/ is joined on
+    (term, ``bucket``) against the broadcast
     query terms and their bucket ids, so dynamic partition pruning
     reads only the query terms' bucket directories, decided when the
     plan executes. Scoring is the exact shared tail, so results are

@@ -1440,9 +1440,12 @@ def ivf_index_topk(
     round_dp: int = 6,
 ) -> DataFrame:
     """nprobe search over a persisted IVF index (ivf_index_write):
-    one lazy plan, built without a Spark job. The index is read with
-    the schema in its own parquet footer (no inference job) and joined
-    on its partition column ``list_id`` against the broadcast probe
+    one lazy plan. Building it starts no Spark job while the index
+    holds at most 32 list directories; above that Spark's parallel
+    partition discovery lists the root with one job at build time.
+    The index is read with the schema in its own parquet footer (no
+    inference job) and joined on its partition column ``list_id``
+    against the broadcast probe
     lists of the queries, so dynamic partition pruning reads only the
     probed list directories, decided when the plan executes. Scoring
     and top-k are the same exact path as ivf_topk, so results are
@@ -1889,15 +1892,15 @@ def ivf_index_compact(
     return int(obs.get["n"])
 
 
-# "auto" bucket sizing for the persisted k-NN graph index: one bucket
-# per ~500 corpus vectors, clamped to [4, 4096]. The bucket count
-# exists for SEARCH pruning (a hop reads only the frontier's buckets)
-# and must scale with the corpus — a fixed 32 was simultaneously
-# overkill at sf0.1 (64 near-empty partition dirs dominated the write
-# constant, r8 verdict item 3) and undersized at 100 TB (buckets too
-# fat to prune meaningfully). 500 vectors/bucket keeps a hop's read
-# amplification bounded while the files stay above parquet's
-# small-file floor at lake scale.
+# "auto" bucket sizing for the persisted k-NN graph index's units/
+# table: one bucket per ~500 corpus vectors, clamped to [4, 4096]. The
+# bucket count exists for SEARCH pruning (the rescore reads only the
+# candidates' buckets) and must scale with the corpus — a fixed 32 was
+# simultaneously overkill at sf0.1 (64 near-empty partition dirs
+# dominated the write constant, r8 verdict item 3) and undersized at
+# 100 TB (buckets too fat to prune meaningfully). 500 vectors/bucket
+# keeps the rescore's read amplification bounded while the files stay
+# above parquet's small-file floor at lake scale.
 _KNN_GRAPH_ROWS_PER_BUCKET = 500
 
 
@@ -2083,11 +2086,11 @@ def knn_graph_index_write(
     """Persist a k-NN GRAPH INDEX (r7, judge item 6): the IVF-index
     lifecycle pattern applied to graph ANN, so searches stop rebuilding
     the NN-descent graph per query session. Three tables under one
-    root, each readable with directory-level pruning:
+    root:
 
-    - ``edges/``   — the NN-descent graph, partitioned by an id-hash
-      bucket of the SOURCE node.
-    - ``units/``   — precomputed unit vectors, partitioned by the same
+    - ``edges/``   — the NN-descent graph (src, dst), unpartitioned:
+      a search broadcasts it whole (|corpus|·k id pairs).
+    - ``units/``   — precomputed unit vectors, partitioned by an
       id-hash bucket: exact rescoring reads only candidate buckets.
     - ``entry/``   — (list_id, node) entry points: the min corpus id
       per inverted list (the IVF coarse quantizer doubling as the walk
@@ -2117,7 +2120,6 @@ def knn_graph_index_write(
             corpus, id_col=id_col, vec_col=vec_col, k=k, rounds=rounds,
             rev_cap=rev_cap, units=units,
         ).select(F.col(id_col).alias("src"), F.col("nbr_id").alias("dst"))
-        bucket = F.pmod(F.xxhash64(F.col("src")), F.lit(n_buckets))
 
         # the three tables are lineage-disjoint past the units
         # checkpoint (edges <- NN-descent rounds; units <- the
@@ -2128,19 +2130,13 @@ def knn_graph_index_write(
         # overlap joins every writer before it returns or raises, so
         # the sidecar stamp + swap happen strictly last.
         def _write_edges():
+            graph.write.mode("overwrite").parquet(os.path.join(tmp, "edges"))
+
+        def _write_units():
             # repartition to EXACTLY n_buckets partitions (not the
             # session's shuffle default): one task and one file per bucket
             # dir, so the write constant scales with the layout, not with
             # a config knob
-            (
-                graph.withColumn("bucket", bucket)
-                .repartition(n_buckets, "bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(os.path.join(tmp, "edges"))
-            )
-
-        def _write_units():
             (
                 units.withColumn(
                     "bucket",
@@ -2188,10 +2184,13 @@ def knn_graph_index_search(
     round_dp: int = 6,
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Search a persisted k-NN graph index as one lazy plan, built
-    without a Spark job. Each query seeds at its nearest list's entry
-    node (broadcast join against the tiny entry table), the walk
-    grows the cumulative node set ``hops`` times, C₀ = entry,
+    """Search a persisted k-NN graph index as one lazy plan. Building
+    it starts no Spark job while units/ holds at most 32 bucket
+    directories (the "auto" layout up to ~16.5k vectors); above that
+    Spark's parallel partition discovery lists units/ with a job at
+    build time. Each query seeds at its nearest list's entry node
+    (broadcast join against the tiny entry table), the walk grows the
+    cumulative node set ``hops`` times, C₀ = entry,
     C_{h+1} = distinct(C_h ∪ N(C_h)) — one linear chain of left joins
     against edges/, which equals graph_expand_topk's union of per-hop
     layers because N(∪L_i) = ∪N(L_i) — and the candidates are
@@ -2199,14 +2198,17 @@ def knn_graph_index_search(
     schema in its own parquet footer (no inference job). The rescore
     joins units/ on its partition column ``bucket`` against the
     broadcast candidate buckets, so dynamic partition pruning reads
-    only those directories, decided when the plan executes. The hops
-    read edges/ whole: that pruning runs only from the broadcast side
-    of a join, and a left join cannot broadcast the side it keeps
-    (edges/ is the small table here: |corpus|·k id pairs). The walk
-    is repartitioned by query once, so each hop's dedup runs where
-    its rows already are (no shuffle per hop while edges/ is
-    broadcast). Results are identical to graph_expand_topk over the
-    same graph (equivalence-tested)."""
+    only those directories, decided when the plan executes.
+
+    The hops join edges/ whole (|corpus|·k id pairs, unpartitioned;
+    5.5 MB of parquet at 100× sf0.1 with k = 4), and the walk is
+    repartitioned by query once, so while edges/ is broadcast the
+    hops run in one stage. Pruning a hop would put C_h on the
+    broadcast side of an inner join — one broadcast and one dedup
+    shuffle per hop, plus a self-row for nodes without out-edges —
+    and that walk measured slower at 1×, 10× and 100× of sf0.1
+    (SCALING.md, knn_graph_search_only). Results are identical to
+    graph_expand_topk over the same graph (equivalence-tested)."""
     import json as _json
     import os
 

@@ -4,8 +4,12 @@
 (batch and streamed layouts) read every index table with the schema
 in its own parquet footer and prune partition directories by dynamic
 partition pruning when the plan executes. Building a search starts no
-Spark job; what pruning read is taken from the scans' "number of
-partitions read" metric in the SQL status store, not from plan text;
+Spark job while no directory of an index table holds more than 32
+partition directories; above that, Spark's parallel partition
+discovery lists the table with a job at build time (the default
+``n_buckets=64`` BM25 index is tested for exactly that). What pruning
+read is taken from the scans' "number of partitions read" metric in
+the SQL status store, not from plan text;
 the footer schemas equal what inference reads; and the graph walk over
 the cumulative node set returns what ``graph_expand_topk``'s union of
 per-hop layers returns."""
@@ -30,8 +34,9 @@ DOCS = [
     (7, "fast scans prune partitions early"),
 ]
 # one list/bucket layout per index, each above the handful a small
-# query set probes (and at most 32 directories per level, above which
-# Spark lists a root with a job)
+# query set probes, and within the 32 directories per level up to
+# which a search builds without a job (the default 64 BM25 buckets are
+# tested on their own below)
 N_LISTS, NPROBE = 16, 4
 GRAPH_BUCKETS = 16
 BM25_BUCKETS = 8
@@ -111,6 +116,36 @@ def test_building_a_search_starts_no_job(spark, emb, indexes, name):
         sc.setJobGroup(None, None)
     assert jobs == [], f"{name}: building ran jobs {jobs}"
     assert df.count() > 0
+
+
+def test_over_32_bucket_directories_are_listed_by_one_job(spark, tmp_path):
+    """bm25_index_write's default 64 buckets: building the search runs
+    exactly one job, Spark's listing of postings/'s bucket
+    directories (its parallel partition discovery above 32 paths)."""
+    # 400 distinct terms fill every one of the 64 term buckets
+    docs = spark.createDataFrame(
+        [(d, " ".join(f"w{d * 10 + i}" for i in range(10))) for d in range(40)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "bm25_default")
+    retrieval.bm25_index_write(docs, path)
+    n_dirs = _leaf_partitions(os.path.join(path, "postings"))
+    assert n_dirs > 32
+    q = docs.filter(F.col("doc_id") == 3)
+    sc = spark.sparkContext
+    sc.setJobGroup("build-bm25-64", "build-bm25-64")
+    try:
+        df = retrieval.bm25_index_topk(spark, path, q, k=4)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("build-bm25-64"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 1, jobs
+    desc = sc._jsc.sc().statusStore().job(jobs[0]).description()
+    assert desc.isDefined() and desc.get().startswith(
+        f"Listing leaf files and directories for {n_dirs} paths"
+    ), desc
+    want = retrieval.bm25_topk(docs, q, k=4).collect()
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, want))
 
 
 def _leaf_partitions(table_dir: str) -> int:

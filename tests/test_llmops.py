@@ -1089,15 +1089,21 @@ class TestIvfIndex:
         )
         assert sorted(map(tuple, got.collect()), key=lambda t: (t[0], t[3])) \
             == sorted(map(tuple, want.collect()), key=lambda t: (t[0], t[3]))
-        # partition pruning: the index scan must carry a PARTITION
-        # filter on list_id (directory-level elimination — note
-        # inputFiles() reports the unpruned relation listing, so the
-        # executed plan is the right witness)
+        # partition pruning: the index scan must carry a dynamic
+        # PARTITION filter on list_id (directory-level elimination —
+        # note inputFiles() reports the unpruned relation listing, so
+        # the executed plan is the right witness). DPP always adds
+        # isnotnull(list_id), and a pruning filter it dropped reads
+        # dynamicpruningexpression(true)
         import re
 
         plan = got._jdf.queryExecution().executedPlan().toString()
-        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert m and "list_id" in m.group(1), plan[:2000]
+        pf = [f for f in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+              if "list_id" in f]
+        assert pf, plan[:2000]
+        for f in pf:
+            assert "dynamicpruningexpression(" in f, f
+            assert "dynamicpruningexpression(true)" not in f, f
 
 
 class TestKnnGraphIndex:
@@ -1137,12 +1143,17 @@ class TestKnnGraphIndex:
         knn_graph_index_write(emb, path, cent, k=4, rounds=2, rev_cap=4)
         got_df = knn_graph_index_search(spark, path, queries, cent, k=5, hops=2)
         assert sorted(map(tuple, got_df.collect())) == want
-        # the rescore read must carry a PARTITION filter on bucket
-        # (the hop-time edge reads use the identical isin-on-partition
-        # construct and execute during search construction)
+        # the rescore's units/ read must carry a dynamic PARTITION
+        # filter on bucket (DPP always adds isnotnull(bucket), and a
+        # pruning filter it dropped reads dynamicpruningexpression(true));
+        # the hops broadcast the unpartitioned edges/ whole
         plan = got_df._jdf.queryExecution().executedPlan().toString()
-        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert m and "bucket" in m.group(1), plan[:2000]
+        pf = [f for f in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+              if "bucket" in f]
+        assert pf, plan[:2000]
+        for f in pf:
+            assert "dynamicpruningexpression(" in f, f
+            assert "dynamicpruningexpression(true)" not in f, f
 
     def test_rebuild_is_atomic_and_heals_crash(self, spark, tmp_path):
         """r7 review: a rebuild lands in a tmp dir and swaps — never

@@ -197,11 +197,13 @@ class TestPersistedIndex:
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
     def test_search_reads_only_probed_buckets(self, spark, indexed):
-        """The postings scan must carry a PARTITION filter on bucket
-        (directory-level elimination — inputFiles() reports the
+        """The postings scan must carry a dynamic PARTITION filter on
+        bucket (directory-level elimination — inputFiles() reports the
         unpruned relation listing, so the executed plan is the right
-        witness; same idiom as the IVF index pruning test). The search
-        is one lazy plan, so the scan sits in the result's own plan;
+        witness; same idiom as the IVF index pruning test). DPP always
+        adds isnotnull(bucket), and a pruning filter it dropped reads
+        dynamicpruningexpression(true). The search is one lazy plan, so
+        the scan sits in the result's own plan;
         tests/test_lazy_index_search.py checks what it read."""
         import re
 
@@ -212,8 +214,12 @@ class TestPersistedIndex:
         got = bm25_index_topk(spark, path, q, k=4)
         got.collect()
         plan = got._jdf.queryExecution().executedPlan().toString()
-        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert m and "bucket" in m.group(1), plan[:2000]
+        pf = [f for f in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+              if "bucket" in f]
+        assert pf, plan[:2000]
+        for f in pf:
+            assert "dynamicpruningexpression(" in f, f
+            assert "dynamicpruningexpression(true)" not in f, f
 
     def test_append_equals_one_shot_build(self, spark, tmp_path):
         from tastytrade_sdk_spark.llmops.retrieval import (
