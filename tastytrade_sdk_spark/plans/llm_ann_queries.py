@@ -435,11 +435,11 @@ def graph_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("knn_graph_index_search", _graph_search_oracle_sql())
 def knn_graph_index_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-ANN with a PERSISTED k-NN graph index (r7, judge item 6):
-    knn_graph_index_write lands the NN-descent edges / unit vectors /
-    entry points as bucket-partitioned tables, and the search walks
-    the stored edges and rescores only the candidates' unit-vector
-    partitions (dynamic partition pruning) instead of rebuilding the
-    graph per query session. Same construction parameters and scoring tail as
+    knn_graph_index_write lands the NN-descent edges, the
+    bucket-partitioned unit vectors and the entry points as tables,
+    and the search walks the stored edges and rescores only the
+    candidates' unit-vector partitions (dynamic partition pruning)
+    instead of rebuilding the graph per query session. Same construction parameters and scoring tail as
     graph_ann_search, so the same end-to-end SQL oracle replays it;
     what this [Q] adds is the index LIFECYCLE (pruning asserted in
     tests/test_llmops.py::TestKnnGraphIndex)."""
@@ -508,9 +508,9 @@ def _graph_fixture_index(spark: SparkSession, sf_dir: str) -> str:
 def knn_graph_search_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SEARCH tail of the persisted graph index, priced on its own
     (r9 judge item 5): knn_graph_index_search bundles build + write +
-    search into one number, which hides that the search itself is
-    corpus-size independent (frontier-bucket-pruned hops + candidate-
-    bucket-pruned rescore, candidates ≤ 1+d+d² per query). This [Q]
+    search into one number, which hides what the search itself costs
+    (hops over the whole edge table, a candidate-bucket-pruned
+    rescore, candidates ≤ 1+d+d² per query). This [Q]
     amortizes the build into a fingerprint-keyed on-disk fixture
     (rebuilt iff the embeddings table changes) and measures only the
     steady-state operation a serving cluster runs per query batch:

@@ -17,10 +17,11 @@ same code deploys unchanged to a multi-executor cluster:
   A session re-runs a fixed mix of queries, so each generated class
   should compile once. Spark's default of 100 entries is a Guava LRU
   split into 4 segments of ~25, so eviction starts well below 100.
-  The perfbench workloads compile 247 (index_lifecycle), 133
-  (backtest) and 82 (live_feed) classes in their first pass; at the
-  default size the next pass recompiled 238, 98 and 25 of them, at
-  2000 it recompiles 0, 7 and 13 (seed 1, 4-core host). It is a
+  With the class naming below, the perfbench workloads compile 171
+  (index_lifecycle), 114 (backtest) and 67 (live_feed) classes in
+  set-up (input generation and the warm-up pass) and 0, 7 and 13 in
+  the timed pass (seed 1, 4-core host). Before that naming, the
+  timed pass recompiled 238, 98 and 25 at the default size. It is a
   static conf, so it is set here, before the session exists;
   ``codegen_compiles`` reads the churn.
 - Whole-stage classes are named without their codegen stage id. With
@@ -28,7 +29,10 @@ same code deploys unchanged to a multi-executor cluster:
   that order changes with which concurrent shuffle stage finishes
   first. The id is part of the class name and so of the cache key: a
   repeated BM25 index search recompiled 4 identical classes in about
-  half its runs because two of its stages swapped ids.
+  half its runs because two of its stages swapped ids. Identical
+  classes of different stages now share one compile: backtest's and
+  live_feed's set-up compiles fell from 130 and 80 to 114 and 67
+  (seed 1, 4-core host).
 - Python workers fork from ``worker_daemon`` (the
   ``spark.python.daemon.module``), so every applyInPandas /
   mapInPandas / pandas_udf / applyInPandasWithState task runs with it.
